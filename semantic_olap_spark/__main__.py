@@ -62,6 +62,12 @@ def _build_engine(args, spark):
 
 
 def _show(df, limit: int) -> None:
+    from semantic_olap_spark.sources.loaders import OLAP_ID
+
+    # partition order varies with the core count; OLAP_ID (the
+    # --order-by identity) makes the first ``limit`` rows stable
+    if OLAP_ID in df.columns:
+        df = df.orderBy(OLAP_ID)
     df.show(limit, truncate=80)
 
 

@@ -175,18 +175,16 @@ class OlapEngine:
 
     def decompose(self, query: str) -> tuple[str, str]:
         llm = self.llm_factory()
-        parsed = parse_llm_json(llm.predict(P.decompose_prompt(query)), default=None)
-        if not isinstance(parsed, dict):
-            # unparseable backend answer: treat the whole query as the
-            # filter intent — NEVER degrade to an empty filter (that
-            # would silently return all rows)
-            return query, ""
+        parsed = parse_llm_json(llm.predict(P.decompose_prompt(query)), default={})
 
         def _text(key: str) -> str:
             v = parsed.get(key)
             return v.strip() if isinstance(v, str) else ""
 
         fq, aq = _text("filter_query"), _text("analysis_query")
+        # an unparseable or empty answer makes the whole query the
+        # filter intent — NEVER an empty filter (that would silently
+        # return all rows)
         return (fq or ("" if aq else query), aq)
 
     def plan_filter(self, history_query: str, query: str, node) -> dict:
@@ -203,7 +201,7 @@ class OlapEngine:
             llm.predict(P.filter_plan_prompt(cols, history_query, query)),
             default=fallback,
         )
-        return plan if isinstance(plan, dict) and plan.get("operations") else fallback
+        return plan if plan.get("operations") else fallback
 
     def _run_analysis(self, analysis_query: str, node) -> DataFrame:
         """Bounded ReAct loop (run_roll_up_and_drill_down)."""
@@ -214,10 +212,8 @@ class OlapEngine:
             dims = [c for c in node.df.columns if c != OLAP_ID]
             step = parse_llm_json(
                 llm.predict(P.react_prompt(analysis_query, dims, history)),
-                default=None,
+                default={},
             )
-            if not isinstance(step, dict):
-                break
             action = step.get("action")
             # Malformed LLM output ends the loop gracefully, like
             # every other LLM-output consumer in this file — it must

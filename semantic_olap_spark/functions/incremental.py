@@ -186,7 +186,8 @@ def quantile_state(
         (lvl1.groupBy(*keys) if keys else lvl1.groupBy())
         .agg(
             dense.alias("counts"),
-            F.sum("_qs_n").alias("cnt"),
+            # keyless empty input: sum over no rows is NULL, the count 0
+            F.coalesce(F.sum("_qs_n"), F.lit(0).cast("long")).alias("cnt"),
             F.min("_qs_min").alias("min"),
             F.max("_qs_max").alias("max"),
         )

@@ -23,10 +23,8 @@ union + one k-bounded ``groupBy``.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -94,7 +92,7 @@ def llm_rerank(
     """
     from semantic_olap_spark.llm import prompts as P
     from semantic_olap_spark.llm.client import default_llm_factory
-    from semantic_olap_spark.operators.semantic import _lazy_llm
+    from semantic_olap_spark.operators.semantic import int_answer, llm_udf
 
     factory = llm_factory or default_llm_factory
     if max_candidates is not None:
@@ -118,21 +116,11 @@ def llm_rerank(
                 f"a token score) or raise/disable max_candidates"
             )
         candidates = bounded
-    state: dict = {}
-
-    @F.pandas_udf(LongType())
-    def scorer(texts: pd.Series) -> pd.Series:
-        llm = _lazy_llm(state, factory)
-        prompts = [
-            P.score_prompt(query, P.row_content([text_col], [t]))
-            for t in texts
-        ]
-        out = []
-        for a in llm.predict_batch(prompts):
-            m = re.search(r"-?\d+", a)
-            out.append(int(m.group()) if m else 0)
-        return pd.Series(out, dtype="int64")
-
+    scorer = llm_udf(
+        LongType(),
+        lambda t: P.score_prompt(query, P.row_content([text_col], [t])),
+        int_answer, factory,
+    )
     return (
         candidates.withColumn(
             score_col, scorer(F.col(text_col).cast("string"))

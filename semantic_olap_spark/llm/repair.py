@@ -41,7 +41,10 @@ def parse_llm_json(response: str, default: Any = None) -> Any:
 
     Returns ``default`` when nothing parseable remains (unlike the
     reference, which returns the raw string — a typed default is
-    safer for plan consumers).
+    safer for plan consumers).  A non-``None`` ``default`` also fixes
+    the answer's type: a parsed value of another type (a list where a
+    dict plan was asked for) returns ``default`` too, so callers never
+    re-check the shape.
     """
     text = _FENCE.sub(r"\1", response or "").strip()
     if text and not (
@@ -50,12 +53,12 @@ def parse_llm_json(response: str, default: Any = None) -> Any:
     ):
         text = _extract_span(text)
     for candidate in (text, _strip_comments(text)):
-        try:
-            return json.loads(candidate)
-        except (json.JSONDecodeError, ValueError):
-            pass
-        try:
-            return ast.literal_eval(candidate)
-        except (ValueError, SyntaxError):
-            pass
+        for parse in (json.loads, ast.literal_eval):
+            try:
+                value = parse(candidate)
+            except (ValueError, SyntaxError):
+                continue
+            if default is None or isinstance(value, type(default)):
+                return value
+            return default
     return default

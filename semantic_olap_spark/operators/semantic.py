@@ -13,19 +13,20 @@ Operaters.py:286,221-223).
 
 Operators receive a picklable ``llm_factory`` (defaults to the
 deterministic stub) so each executor process builds its own client +
-prompt cache.
+prompt cache.  Every per-row LLM call goes through :func:`llm_udf`,
+and every answer is read by one of the answer rules beside it.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from typing import Sequence
+from typing import Callable, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StringType
+from pyspark.sql.types import BooleanType, DataType, StringType
 
 from semantic_olap_spark.llm import prompts as P
 from semantic_olap_spark.llm.client import LLMFactory, default_llm_factory
@@ -35,11 +36,70 @@ from semantic_olap_spark.operators.deterministic import _NUM_OPS
 OLAP_ID = "OLAP_ID"
 
 
-def _lazy_llm(state: dict, llm_factory: LLMFactory):
-    llm = state.get("llm")
-    if llm is None:
-        llm = state["llm"] = llm_factory()
-    return llm
+def llm_udf(
+    return_type: DataType,
+    prompt_of_row: Callable[..., str],
+    parse_answer: Callable[[str], object],
+    llm_factory: LLMFactory,
+):
+    """Arrow-batched pandas UDF making one LLM call per row.
+
+    The client is built lazily inside the worker on the first batch
+    (never on the driver) and reused for later batches; each batch is
+    ONE ``predict_batch`` over ``prompt_of_row(*row_values)``, and each
+    answer is mapped through ``parse_answer`` (one of the rules below).
+    """
+    state: dict = {}
+
+    @F.pandas_udf(return_type)
+    def call(*series: pd.Series) -> pd.Series:
+        llm = state.get("llm")
+        if llm is None:
+            llm = state["llm"] = llm_factory()
+        prompts = [prompt_of_row(*vals) for vals in zip(*series)]
+        return pd.Series([parse_answer(a) for a in llm.predict_batch(prompts)])
+
+    return call
+
+
+# ---- answer rules: every LLM answer is read by exactly one of these
+# (plain text answers use ``str.strip``)
+
+
+def yes_answer(answer: str) -> bool:
+    """Yes/No judge: anything but a "y..." answer is False."""
+    return answer.strip().lower().startswith("y")
+
+
+def a_wins_answer(answer: str) -> bool:
+    """Pairwise judge: True when the answer names candidate A."""
+    return answer.strip().upper().startswith("A")
+
+
+def text_or_na_answer(answer: str) -> str:
+    """Stripped text with failure markers mapped to "NA".
+
+    The reference maps ''/'NA'/'N/A'/'UNKNOWN' case-insensitively
+    (Operaters.py ask_llm) so backend hiccups don't leak as distinct
+    values.
+    """
+    answer = answer.strip()
+    return "NA" if answer.upper() in ("", "NA", "N/A", "UNKNOWN") else answer
+
+
+def int_answer(answer: str) -> int:
+    """First integer in the answer; 0 (never NULL) when there is none."""
+    m = re.search(r"-?\d+", answer)
+    return int(m.group()) if m else 0
+
+
+def summarizer(columns: Sequence[str], llm_factory: LLMFactory):
+    """sem_reduce's per-group summary UDF over a sorted value array."""
+    cols = list(columns)
+    return llm_udf(
+        StringType(), lambda vals: P.reduce_prompt(cols, list(vals)),
+        str.strip, llm_factory,
+    )
 
 
 def spread_for_inference(df: DataFrame) -> DataFrame:
@@ -83,18 +143,11 @@ def sem_filter_cond(
     staged Kleene executor.
     """
     cols = list(columns)
-    state: dict = {}
-
-    @F.pandas_udf(BooleanType())
-    def judge(*series: pd.Series) -> pd.Series:
-        llm = _lazy_llm(state, llm_factory)
-        prompts = [
-            P.filter_prompt(condition, P.row_content(cols, vals))
-            for vals in zip(*series)
-        ]
-        ans = llm.predict_batch(prompts)
-        return pd.Series([a.strip().lower().startswith("y") for a in ans])
-
+    judge = llm_udf(
+        BooleanType(),
+        lambda *vals: P.filter_prompt(condition, P.row_content(cols, vals)),
+        yes_answer, llm_factory,
+    )
     cond = judge(*[F.col(c).cast("string") for c in cols])
     return cond if retain_if else ~cond
 
@@ -176,23 +229,16 @@ def sem_join_cond(
 ) -> Column:
     """Boolean Column judging a (left row, right row) pair via the LLM."""
     lc, rc = list(left_cols), list(right_cols)
-    state: dict = {}
-
-    @F.pandas_udf(BooleanType())
-    def judge(*series: pd.Series) -> pd.Series:
-        llm = _lazy_llm(state, llm_factory)
-        nl = len(lc)
-        prompts = [
-            P.join_prompt(
-                condition,
-                P.row_content(lc, vals[:nl]),
-                P.row_content(rc, vals[nl:]),
-            )
-            for vals in zip(*series)
-        ]
-        ans = llm.predict_batch(prompts)
-        return pd.Series([a.strip().lower().startswith("y") for a in ans])
-
+    nl = len(lc)
+    judge = llm_udf(
+        BooleanType(),
+        lambda *vals: P.join_prompt(
+            condition,
+            P.row_content(lc, vals[:nl]),
+            P.row_content(rc, vals[nl:]),
+        ),
+        yes_answer, llm_factory,
+    )
     return judge(*[F.col(c).cast("string") for c in lc + rc])
 
 
@@ -298,19 +344,11 @@ def sem_dedup_pairs(
         )
         .drop("id_b_")
     )
-    state: dict = {}
-
-    @F.pandas_udf(BooleanType())
-    def same(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        llm = _lazy_llm(state, llm_factory)
-        prompts = [
-            P.dedup_pair_prompt(a or "", b or "") for a, b in zip(ta, tb)
-        ]
-        ans = llm.predict_batch(prompts)
-        return pd.Series(
-            [a.strip().lower().startswith("y") for a in ans]
-        )
-
+    same = llm_udf(
+        BooleanType(),
+        lambda a, b: P.dedup_pair_prompt(a or "", b or ""),
+        yes_answer, llm_factory,
+    )
     return pairs.filter(same(F.col("_ta"), F.col("_tb"))).select(*out_cols)
 
 
@@ -326,24 +364,13 @@ def sem_map(
 ) -> DataFrame:
     """Add LLM-generated column ``keyword`` ("NA" on failure)."""
     cols = list(columns)
-    state: dict = {}
-
-    @F.pandas_udf(StringType())
-    def mapper(*series: pd.Series) -> pd.Series:
-        llm = _lazy_llm(state, llm_factory)
-        prompts = [
-            P.map_prompt(keyword, map_description, P.row_content(cols, vals))
-            for vals in zip(*series)
-        ]
-        # normalize failure markers to "NA" (the reference maps
-        # ''/'NA'/'N/A'/'UNKNOWN' case-insensitively, Operaters.py
-        # ask_llm) so backend hiccups don't leak as distinct values
-        out = []
-        for a in llm.predict_batch(prompts):
-            a = a.strip()
-            out.append("NA" if a.upper() in ("", "NA", "N/A", "UNKNOWN") else a)
-        return pd.Series(out)
-
+    mapper = llm_udf(
+        StringType(),
+        lambda *vals: P.map_prompt(
+            keyword, map_description, P.row_content(cols, vals)
+        ),
+        text_or_na_answer, llm_factory,
+    )
     return df.withColumn(keyword, mapper(*[F.col(c).cast("string") for c in cols]))
 
 
@@ -370,9 +397,7 @@ def induce_taxonomy(
     samples = [P.row_content(columns, list(r)) for r in rows]
     llm = llm_factory()
     raw = llm.predict(P.group_induce_prompt(keyword, group_description, samples))
-    tags = parse_llm_json(raw, default=[])
-    if not isinstance(tags, list) or not tags:
-        tags = ["other"]
+    tags = parse_llm_json(raw, default=[]) or ["other"]
     return [str(t) for t in tags]
 
 
@@ -395,19 +420,13 @@ def sem_group(
         df, columns, group_description, keyword, llm_factory, sample_n
     )
     cols = list(columns)
-    state: dict = {}
-
-    @F.pandas_udf(StringType())
-    def classify(*series: pd.Series) -> pd.Series:
-        llm = _lazy_llm(state, llm_factory)
-        prompts = [
-            P.group_classify_prompt(
-                keyword, group_description, tags, P.row_content(cols, vals)
-            )
-            for vals in zip(*series)
-        ]
-        return pd.Series([a.strip() for a in llm.predict_batch(prompts)])
-
+    classify = llm_udf(
+        StringType(),
+        lambda *vals: P.group_classify_prompt(
+            keyword, group_description, tags, P.row_content(cols, vals)
+        ),
+        str.strip, llm_factory,
+    )
     return df.withColumn(keyword, classify(*[F.col(c).cast("string") for c in cols]))
 
 
@@ -797,7 +816,6 @@ def sem_reduce(
     prompt; at 100 TB that is an OOM.  ``None`` disables (parity mode).
     """
     cols = list(columns)
-    state: dict = {}
     vals_arr = F.sort_array(
         F.array_distinct(
             F.flatten(
@@ -807,18 +825,13 @@ def sem_reduce(
     )
     if max_values is not None:
         vals_arr = F.slice(vals_arr, 1, int(max_values))
-
-    @F.pandas_udf(StringType())
-    def summarize(vals: pd.Series) -> pd.Series:
-        llm = _lazy_llm(state, llm_factory)
-        prompts = [P.reduce_prompt(cols, list(v)) for v in vals]
-        return pd.Series([a.strip() for a in llm.predict_batch(prompts)])
-
     keys = [group_by] if isinstance(group_by, str) else list(group_by or [])
     grouped = (df.groupBy(*keys) if keys else df.groupBy()).agg(
         vals_arr.alias("_vals")
     )
-    return grouped.withColumn(alias, summarize(F.col("_vals"))).drop("_vals")
+    return grouped.withColumn(
+        alias, summarizer(cols, llm_factory)(F.col("_vals"))
+    ).drop("_vals")
 
 
 # ---- sem_topk (Operaters.py:453-494; catalog baseline_LLM_direct.py:113-123)
@@ -963,16 +976,11 @@ def sem_topk(
     )
     pairs = pairs.join(right, pairs["_opp"] == right["_rank_b"])
 
-    state: dict = {}
-
-    @F.pandas_udf(BooleanType())
-    def a_wins(ca: pd.Series, cb: pd.Series) -> pd.Series:
-        llm = _lazy_llm(state, llm_factory)
-        prompts = [P.topk_pair_prompt(query, a, b) for a, b in zip(ca, cb)]
-        return pd.Series(
-            [ans.strip().upper().startswith("A") for ans in llm.predict_batch(prompts)]
-        )
-
+    a_wins = llm_udf(
+        BooleanType(),
+        lambda a, b: P.topk_pair_prompt(query, a, b),
+        a_wins_answer, llm_factory,
+    )
     judged = pairs.withColumn("_a_wins", a_wins(F.col("_ca"), F.col("_cb")))
     winner_ids = judged.select(
         F.when(F.col("_a_wins"), F.col("_id_a")).otherwise(F.col("_id_b")).alias("_wid")
@@ -1097,7 +1105,7 @@ def filter_pattern_cond(
                 )
                 num = F.when(ext == "", F.lit(None)).otherwise(ext).try_cast("double")
                 masks.append(_NUM_OPS[c["operator"]](num, F.lit(float(c["threshold"]))))
-        except (json.JSONDecodeError, KeyError, TypeError, ValueError, re.error):
+        except (KeyError, TypeError, ValueError, re.error):
             continue
         if not masks:
             continue

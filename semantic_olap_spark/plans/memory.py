@@ -64,7 +64,7 @@ def llm_relation_classifier(llm_factory=None):
         res = parse_llm_json(
             llm.predict(P.relation_prompt(new_query, node_query)), default={}
         )
-        rel = str(res.get("relation", "") if isinstance(res, dict) else "").lower()
+        rel = str(res.get("relation", "")).lower()
         for key, out in (
             ("contain", "Contain"), ("subset", "Subset"), ("equal", "Equal"),
             ("intersect", "Intersect"),

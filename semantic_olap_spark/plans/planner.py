@@ -187,9 +187,7 @@ def dice_plan(
     raw = llm.predict(
         P.dice_strategy_prompt(field, _field_samples(df, field), condition)
     )
-    proposal = parse_llm_json(raw, default=None)
-    if not isinstance(proposal, dict):
-        proposal = {"field": field, "strategy": []}
+    proposal = parse_llm_json(raw, default={})
     chosen_field = proposal.get("field") or field
     if chosen_field not in df.columns:
         chosen_field = field
@@ -240,12 +238,10 @@ def slice_plan(
     """Keyword expansion + field pruning (Slice_Agent.run)."""
     llm = llm_factory()
     keywords = parse_llm_json(llm.predict(P.keywords_prompt(condition)), default=[])
-    if not isinstance(keywords, list):
-        keywords = []
     keywords = remove_super_keywords([str(k) for k in keywords])
     cols = df.columns
     fields = parse_llm_json(llm.predict(P.fields_prompt(condition, cols)), default=[])
-    fields = [f for f in fields if f in cols] if isinstance(fields, list) else []
+    fields = [f for f in fields if f in cols]
     if not fields:
         fields = list(cols)
     return {
@@ -454,11 +450,10 @@ def understand_topk(
     llm_factory: LLMFactory = default_llm_factory,
 ) -> dict:
     llm = llm_factory()
-    parsed = parse_llm_json(
+    return parse_llm_json(
         llm.predict(P.topk_intent_prompt(columns, query)),
         default={"topk_type": "not applicable"},
     )
-    return parsed if isinstance(parsed, dict) else {"topk_type": "not applicable"}
 
 
 def topk_dispatch(

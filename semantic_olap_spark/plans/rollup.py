@@ -29,16 +29,14 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from semantic_olap_spark.llm import prompts as P
 from semantic_olap_spark.llm.client import LLMFactory, default_llm_factory
 from semantic_olap_spark.llm.repair import parse_llm_json
 from semantic_olap_spark.operators.deterministic import AGGS
-from semantic_olap_spark.operators.semantic import sem_group, sem_map
+from semantic_olap_spark.operators.semantic import sem_group, sem_map, summarizer
 from semantic_olap_spark.plans.memory import CubeMemory, CubeNode, GranularityView
 from semantic_olap_spark.sources.loaders import OLAP_ID
 
@@ -51,8 +49,6 @@ def understand_self_reduce(
     plan = parse_llm_json(
         llm.predict(P.self_reduce_prompt(description)), default={"type": "count"}
     )
-    if not isinstance(plan, dict):
-        plan = {"type": "count"}
     if plan.get("type") not in ("count", "num_reduce"):
         plan = {"type": "count"}
     return plan
@@ -76,7 +72,7 @@ def query_granularity_exist(
         llm.predict(P.granularity_match_prompt(candidates, target, thought)),
         default={},
     )
-    chosen = res.get("chosen") if isinstance(res, dict) else None
+    chosen = res.get("chosen")
     return chosen if chosen in candidates else None
 
 
@@ -91,20 +87,6 @@ def _ensure_root_granularity(node: CubeNode, dimension: str) -> GranularityView:
         )
         dim.add(root)
     return root
-
-
-def _summarize_udf(llm_factory: LLMFactory, column: str):
-    state: dict = {}
-
-    @F.pandas_udf(StringType())
-    def summarize(vals: pd.Series) -> pd.Series:
-        llm = state.get("llm")
-        if llm is None:
-            llm = state["llm"] = llm_factory()
-        prompts = [P.reduce_prompt([column], list(v)) for v in vals]
-        return pd.Series([a.strip() for a in llm.predict_batch(prompts)])
-
-    return summarize
 
 
 def roll_up(
@@ -244,7 +226,7 @@ def roll_up(
     )
     for col, _ in vals_cols:
         grouped = grouped.withColumn(
-            col, _summarize_udf(llm_factory, col)(F.col(f"_vals_{col}"))
+            col, summarizer([col], llm_factory)(F.col(f"_vals_{col}"))
         ).drop(f"_vals_{col}")
 
     gv = dim.get(actual)
@@ -320,8 +302,6 @@ def extract_dimension(
     """LLM dimension extraction (Drill_Down_Agent.understand)."""
     llm = llm_factory()
     res = parse_llm_json(llm.predict(P.drill_dim_prompt(query, thought)), default={})
-    if not isinstance(res, dict):
-        res = {}
     return {
         "title": res.get("title", "derived"),
         "dimension_desc": res.get("dimension_desc", query),

@@ -4,13 +4,14 @@ The DataFrame API is the engine's native surface; this module makes
 the semantic layer reachable from plain SQL — ``SELECT * FROM docs
 WHERE sem_filter(text, 'reports a postgres error')`` — so SQL-only
 clients (notebooks, BI tools, `spark-sql`) get the same operators
-with the same execution shape.  Each function registers as an
-Arrow-batched pandas UDF over the session's LLM factory: Catalyst
-treats it like any other predicate/projection (it is subject to the
-usual UDF placement rules — deterministic-filter pushdown still
-happens below it, and the batch shapes match the DataFrame
-operators exactly, because they share the prompt builders and the
-``llm.predict_batch`` protocol).
+with the same execution shape.  Each function is built by the
+DataFrame operators' own UDF builder
+(:func:`~semantic_olap_spark.operators.semantic.llm_udf`) over the
+session's LLM factory and reads its answers with the same answer
+rules, so SQL and DataFrame results agree (``sem_map`` maps failure
+markers to "NA" on both surfaces).  Catalyst treats each UDF like any
+other predicate/projection (it is subject to the usual UDF placement
+rules — deterministic-filter pushdown still happens below it).
 
 Names are prefixed ``sem_`` and collide with nothing Spark ships.
 Registration is per-SparkSession and idempotent (re-registering
@@ -19,12 +20,17 @@ replaces the previous binding — how Spark's UDF registry behaves).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.types import BooleanType, LongType, StringType
 
 from semantic_olap_spark.llm import prompts as P
 from semantic_olap_spark.llm.client import LLMFactory, default_llm_factory
+from semantic_olap_spark.operators.semantic import (
+    int_answer,
+    llm_udf,
+    text_or_na_answer,
+    yes_answer,
+)
 from semantic_olap_spark.sources.loaders import TABLES, load_tables
 
 
@@ -33,71 +39,33 @@ def register_semantic_sql(
     llm_factory: LLMFactory = default_llm_factory,
 ) -> list[str]:
     """Register the semantic UDFs; returns the registered names."""
-    state: dict = {}
-
-    def _llm():
-        if "llm" not in state:
-            state["llm"] = llm_factory()
-        return state["llm"]
-
-    def sem_filter_fn(content: pd.Series, cond: pd.Series) -> pd.Series:
-        llm = _llm()
-        prompts = [
-            P.filter_prompt(c or "", t or "")
-            for t, c in zip(content, cond)
-        ]
-        return pd.Series(
-            [a.strip().lower().startswith("y")
-             for a in llm.predict_batch(prompts)]
-        )
-
-    def sem_map_fn(
-        content: pd.Series, keyword: pd.Series, instr: pd.Series
-    ) -> pd.Series:
-        llm = _llm()
-        prompts = [
-            P.map_prompt(k or "", i or "", t or "")
-            for t, k, i in zip(content, keyword, instr)
-        ]
-        return pd.Series([a.strip() for a in llm.predict_batch(prompts)])
-
-    def sem_dedup_fn(a: pd.Series, b: pd.Series) -> pd.Series:
-        llm = _llm()
-        prompts = [
-            P.dedup_pair_prompt(x or "", y or "") for x, y in zip(a, b)
-        ]
-        return pd.Series(
-            [ans.strip().lower().startswith("y")
-             for ans in llm.predict_batch(prompts)]
-        )
-
-    def sem_score_fn(content: pd.Series, query: pd.Series) -> pd.Series:
-        import re as _re
-
-        llm = _llm()
-        prompts = [
-            P.score_prompt(q or "", t or "")
-            for t, q in zip(content, query)
-        ]
-        out = []
-        for a in llm.predict_batch(prompts):
-            m = _re.search(r"-?\d+", a)
-            out.append(int(m.group()) if m else 0)
-        return pd.Series(out, dtype="int64")
-
-    from pyspark.sql.functions import pandas_udf
-
-    spark.udf.register(
-        "sem_filter", pandas_udf(sem_filter_fn, BooleanType())
-    )
-    spark.udf.register("sem_map", pandas_udf(sem_map_fn, StringType()))
-    spark.udf.register(
-        "sem_same", pandas_udf(sem_dedup_fn, BooleanType())
-    )
-    spark.udf.register(
-        "sem_score", pandas_udf(sem_score_fn, LongType())
-    )
-    return ["sem_filter", "sem_map", "sem_same", "sem_score"]
+    udfs = {
+        "sem_filter": llm_udf(
+            BooleanType(),
+            lambda content, cond: P.filter_prompt(cond or "", content or ""),
+            yes_answer, llm_factory,
+        ),
+        "sem_map": llm_udf(
+            StringType(),
+            lambda content, keyword, instr: P.map_prompt(
+                keyword or "", instr or "", content or ""
+            ),
+            text_or_na_answer, llm_factory,
+        ),
+        "sem_same": llm_udf(
+            BooleanType(),
+            lambda a, b: P.dedup_pair_prompt(a or "", b or ""),
+            yes_answer, llm_factory,
+        ),
+        "sem_score": llm_udf(
+            LongType(),
+            lambda content, query: P.score_prompt(query or "", content or ""),
+            int_answer, llm_factory,
+        ),
+    }
+    for name, udf in udfs.items():
+        spark.udf.register(name, udf)
+    return list(udfs)
 
 
 def register_tables(

@@ -58,6 +58,10 @@ def so_table(spark):
 
 
 def _load_scenarios():
+    # the module-level skipif cannot stop this import-time read, so an
+    # absent corpus must yield no scenarios instead of failing collection
+    if not os.path.exists(CORPUS):
+        return []
     corpus = json.load(open(CORPUS))
     out = []
     for item in corpus:

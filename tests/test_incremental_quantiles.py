@@ -111,6 +111,13 @@ def test_nulls_ignored_and_empty_group_null(spark):
     assert out["b"]["cnt"] == 0 and out["b"]["q_0_5"] is None
 
 
+def test_keyless_empty_input_counts_zero(spark):
+    df = spark.createDataFrame([], "v double")
+    row = quantile_state(df, "v", 0.0, 10.0, 4).collect()[0]
+    assert row["cnt"] == 0 and row["counts"] == [0, 0, 0, 0]
+    assert row["min"] is None and row["max"] is None
+
+
 def test_single_bin_degenerate(spark):
     df = spark.createDataFrame([(1.0,), (2.0,), (3.0,)], "v double")
     st = quantile_state(df, "v", 0.0, 10.0, 1)

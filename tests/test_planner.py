@@ -113,6 +113,27 @@ def test_compile_compare_strategy_end_to_end(tables, duck):
     )
 
 
+def test_compile_compare_strategy_list_answer_falls_back(tables):
+    # a direct-filter answer shaped as a list (not the {"operations":
+    # ...} dict asked for) must fall back to the LLM row filter
+    class ListLLM:
+        def predict(self, prompt):
+            return '[{"operator_name": "num_filter"}]'
+
+    plan = {
+        "type": "dice",
+        "optimize": {"strategy": "compare_str_or_num"},
+        "field": "o_totalprice",
+        "query": "o_totalprice > 400000",
+    }
+    sub = compile_filter_op(plan, llm_factory=ListLLM)
+    assert sub["operations"] == [
+        {"id": 1, "operator_name": "sem_filter",
+         "parameters": {"columns": ["o_totalprice"],
+                        "condition": "o_totalprice > 400000"}}
+    ]
+
+
 def test_dice_pattern_end_to_end_on_props(tables, duck):
     plan = dice_plan(tables["events"], "props", "value > 50")
     sub = compile_filter_op(plan)

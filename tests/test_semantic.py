@@ -207,6 +207,20 @@ def test_filter_enum(tables, duck):
     )
 
 
+def test_filter_enum_dict_answer_keeps_nothing(tables):
+    # a keep-list answer shaped as a dict must not turn its KEYS into
+    # the keep-list
+    class DictLLM:
+        def predict(self, prompt):
+            return '{"1-URGENT": true, "2-HIGH": true}'
+
+    df = filter_enum_llm(
+        tables["orders"], "o_orderpriority", "urgent priority",
+        llm_factory=DictLLM,
+    )
+    assert df.count() == 0
+
+
 def test_filter_pattern_events_props(tables, duck):
     # props look like {"k": 69} — digit-masked template {"k": <*>}
     df = filter_pattern(tables["events"], "props", "value > 50")

@@ -58,6 +58,28 @@ def test_sql_sem_map_and_same(spark, sf_dir):
     assert row["s"] is True  # identical texts are duplicates
 
 
+def test_sql_sem_map_failure_marker_is_na(spark):
+    # same answer rule as DataFrame sem_map: failure markers -> "NA"
+    answers = {"qq1": " unknown ", "qq2": "", "qq3": "N/A", "qq4": " spark "}
+
+    class MarkerLLM:
+        def predict_batch(self, prompts):
+            return [next(a for k, a in answers.items() if k in p)
+                    for p in prompts]
+
+    register_semantic_sql(spark, llm_factory=MarkerLLM)
+    try:
+        rows = spark.sql(
+            "SELECT t, sem_map(t, 'topic', 'main topic') AS m FROM VALUES "
+            "('qq1'), ('qq2'), ('qq3'), ('qq4') AS v(t)"
+        ).collect()
+    finally:
+        register_semantic_sql(spark)
+    assert {r["t"]: r["m"] for r in rows} == {
+        "qq1": "NA", "qq2": "NA", "qq3": "NA", "qq4": "spark",
+    }
+
+
 def test_pushdown_below_semantic_udf(spark, sf_dir):
     import io
     from contextlib import redirect_stdout

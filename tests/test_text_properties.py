@@ -14,6 +14,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from tests.conftest import fuzz_budget
+
 _SETTINGS = dict(
     max_examples=fuzz_budget(12, 5),
     deadline=None,
@@ -32,8 +34,7 @@ _TEXT = st.text(
 @settings(**_SETTINGS)
 @given(texts=st.lists(_TEXT, min_size=1, max_size=5))
 def test_normalize_idempotent_and_shrinking(spark, texts):
-    from tests.conftest import fuzz_budget
-from semantic_olap_spark.functions.cleaning import normalize_text
+    from semantic_olap_spark.functions.cleaning import normalize_text
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id INT, text STRING"

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from semantic_olap_spark.llm import prompts as P
 from semantic_olap_spark.llm.client import LLMFactory, default_llm_factory
 from semantic_olap_spark.llm.repair import parse_llm_json
+from semantic_olap_spark.operators.semantic import profile_scope
 from semantic_olap_spark.plans.memory import CubeMemory
 from semantic_olap_spark.plans.planner import (
     flatten_plan,
@@ -307,6 +308,7 @@ class OlapEngine:
 
     # -- the lifecycle ----------------------------------------------------
 
+    @profile_scope()
     def plan_only(self, query: str) -> dict:
         """Plan a query without executing it (deferred planning).
 
@@ -359,6 +361,7 @@ class OlapEngine:
             )
         return out
 
+    @profile_scope()
     def estimate(self, query: str, sample_rows: int = 2048,
                  probe_llm: bool = False) -> dict:
         """Predict the LLM cost of ``run(query)`` without running it.
@@ -408,6 +411,7 @@ class OlapEngine:
         ]
         return out
 
+    @profile_scope()
     def run(self, query: str, materialize: bool = True) -> DataFrame:
         """Execute one NL query through the full lifecycle.
 

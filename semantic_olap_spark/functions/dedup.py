@@ -978,6 +978,12 @@ def minhash_index(
     collide correctly.  :func:`dedup_against_minhash` recomputes the
     batch side internally from its own arguments, so pass one shared
     config dict in calling code.
+
+    Each call pins a tracked persist (the signature frame, see below)
+    that stays in the block manager until
+    ``caching.release_caches()`` or the enclosing
+    ``caching.cache_scope()`` exits; a long-lived session that builds
+    many indexes should release them.
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")

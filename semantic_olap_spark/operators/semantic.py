@@ -21,12 +21,14 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Callable, Sequence
+import weakref
+from contextlib import contextmanager
+from typing import Callable, NamedTuple, Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DataType, StringType
+from pyspark.sql.types import BooleanType, DataType, MapType, StringType
 
 from semantic_olap_spark.llm import prompts as P
 from semantic_olap_spark.llm.client import LLMFactory, default_llm_factory
@@ -995,6 +997,133 @@ def sem_topk(
     return out if keep_wins else out.drop("wins")
 
 
+# ---- column profiles, shared by dice profiling and the physical filters
+
+# One planned query profiles each diced column once: the dice veto
+# (plans.planner.profile_patternized / profile_enumerable) and the
+# physical filter built from its verdict (filter_pattern_cond /
+# filter_enum_cond) read the same collected profile.  Memoized per
+# frame object (weakly: a dropped frame drops its profiles) and cleared
+# by the query entry points when they finish, so a later query on
+# changed files profiles again.  Concurrent queries share the memo; a
+# race at worst profiles a column twice, never mixes two frames.
+_PROFILES: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+TEMPLATE_TOP = 20  # filter_pattern's template cap (Operaters.py:221-223)
+ENUM_TOP = 100  # filter_enum's value preview cap (Operaters.py:286-294)
+
+
+class ColumnProfile(NamedTuple):
+    """One frequency table, collected: its totals plus its top groups.
+
+    ``totals`` maps each totals aggregate's name to its value over
+    every group; ``top`` holds the most frequent groups as rows (``_k``
+    key, ``_c`` count, plus the profile's extra column).
+    """
+
+    totals: dict
+    top: list
+
+
+@contextmanager
+def profile_scope():
+    """One planned query: every column profile is forgotten on exit.
+
+    Usable as a decorator (``@profile_scope()``) on query entry points.
+    """
+    try:
+        yield
+    finally:
+        _PROFILES.clear()
+
+
+def template_of(column: str) -> Column:
+    """Digit-masked template of ``column``'s string form (the
+    reference's ``re.sub('[0-9]+', '<*>')`` masking, Operaters.py:209)."""
+    return F.regexp_replace(F.col(column).cast("string"), "[0-9]+", "<*>")
+
+
+def _profile(
+    df: DataFrame, key: tuple, groups: DataFrame, totals: Sequence[Column],
+    order: Sequence[Column], n_top: int, keep: Column | None = None,
+) -> ColumnProfile:
+    per_frame = _PROFILES.setdefault(df, {})
+    if key not in per_frame:
+        # ONE job after the grouping shuffle: the ``keep`` groups' top
+        # ``n_top`` by an ordered limit (a bounded top-N per partition,
+        # never every group in one task), while observe() folds the
+        # totals over every group on the way
+        obs = Observation()
+        seen = groups.observe(obs, *totals)
+        if keep is not None:
+            seen = seen.filter(keep)
+        top = seen.orderBy(*order).limit(n_top).collect()
+        per_frame[key] = ColumnProfile(totals=obs.get, top=top)
+    return per_frame[key]
+
+
+def template_profile(
+    df: DataFrame, column: str, n_top: int = TEMPLATE_TOP, n_examples: int = 3
+) -> ColumnProfile:
+    """Digit-masked template frequencies of the non-null ``column``.
+
+    ``top`` rows: ``_k`` template, ``_c`` count, ``_ex`` the
+    ``n_examples`` smallest distinct values; at least
+    :data:`TEMPLATE_TOP` of them, by count desc then template.
+    ``totals``: ``total`` rows and ``n_groups`` distinct templates.
+    """
+    n_top = max(n_top, TEMPLATE_TOP)
+    groups = (
+        df.filter(F.col(column).isNotNull())
+        .groupBy(template_of(column).alias("_k"))
+        .agg(
+            F.count(F.lit(1)).alias("_c"),
+            F.slice(
+                F.sort_array(F.collect_set(F.col(column).cast("string"))),
+                1, n_examples,
+            ).alias("_ex"),
+        )
+    )
+    return _profile(
+        df, ("template", column, n_top, n_examples), groups,
+        [F.sum("_c").alias("total"), F.count(F.lit(1)).alias("n_groups")],
+        [F.col("_c").desc(), F.col("_k")], n_top,
+    )
+
+
+def value_profile(
+    df: DataFrame, column: str, n_top: int = ENUM_TOP
+) -> ColumnProfile:
+    """Value frequencies of ``column``, grouped by its string form.
+
+    ``top`` rows: ``_k`` string form, ``_c`` count, ``_v`` the value;
+    non-null only, at least :data:`ENUM_TOP` of them, by count desc
+    then value.  ``totals``: ``total`` rows with nulls (pandas
+    ``len(col)``), ``n_groups`` distinct non-null values,
+    ``n_nonnull``, and ``len_sum`` (string lengths weighted by
+    frequency).
+    """
+    n_top = max(n_top, ENUM_TOP)
+    groups = df.groupBy(F.col(column).cast("string").alias("_k")).agg(
+        F.count(F.lit(1)).alias("_c"), F.any_value(F.col(column)).alias("_v")
+    )
+    nn = F.col("_k").isNotNull()
+    # a map value has no order: break its ties by the string form
+    tie = "_k" if isinstance(df.schema[column].dataType, MapType) else "_v"
+    return _profile(
+        df, ("value", column, n_top), groups,
+        [
+            F.sum("_c").alias("total"),
+            F.count(F.when(nn, 1)).alias("n_groups"),
+            F.sum(F.when(nn, F.col("_c"))).alias("n_nonnull"),
+            F.sum(F.when(nn, F.length("_k") * F.col("_c"))).alias("len_sum"),
+        ],
+        [F.col("_c").desc(), F.col(tie)], n_top, keep=nn,
+    )
+
+
 # ---- filter_enum_llm (Operaters.py:281-313, "enumerable" strategy)
 
 
@@ -1003,25 +1132,16 @@ def filter_enum_cond(
     column: str,
     condition: str,
     llm_factory: LLMFactory = default_llm_factory,
-    top_n: int = 100,
+    top_n: int = ENUM_TOP,
 ) -> Column:
     """Enumerable-column filter: LLM picks a keep-list of values.
 
-    Driver collects ≤ ``top_n`` distinct values by descending
-    frequency (the reference's 100-value preview cap,
+    The preview is the ≤ ``top_n`` most frequent distinct values of
+    :func:`value_profile` (the reference's 100-value preview cap,
     Operaters.py:286-294), one LLM call returns the keep-list, and
     the filter is ``col IN keep`` — pure Catalyst, pushdown-friendly.
     """
-    vals = [
-        r[0]
-        for r in df.filter(F.col(column).isNotNull())
-        .groupBy(column)
-        .count()
-        .orderBy(F.col("count").desc(), F.col(column))
-        .limit(top_n)
-        .select(column)
-        .collect()
-    ]
+    vals = [r["_v"] for r in value_profile(df, column, top_n).top[:top_n]]
     llm = llm_factory()
     keep = parse_llm_json(
         llm.predict(P.enum_prompt(condition, [str(v) for v in vals])), default=[]
@@ -1036,7 +1156,7 @@ def filter_enum_llm(
     column: str,
     condition: str,
     llm_factory: LLMFactory = default_llm_factory,
-    top_n: int = 100,
+    top_n: int = ENUM_TOP,
 ) -> DataFrame:
     return df.filter(filter_enum_cond(df, column, condition, llm_factory, top_n))
 
@@ -1050,13 +1170,11 @@ def filter_pattern_cond(
     condition: str,
     llm_factory: LLMFactory = default_llm_factory,
     sample_n: int = 3,
-    max_templates: int = 20,
+    max_templates: int = TEMPLATE_TOP,
 ) -> Column:
     """Pattern-extraction filter.
 
-    1. Digit-mask values into templates (``regexp_replace(col,
-       '[0-9]+', '<*>')`` — the reference's ``re.sub`` masking,
-       Operaters.py:209).
+    1. Digit-mask values into templates (:func:`template_profile`).
     2. For each of the ≤ ``max_templates`` most frequent templates,
        sample ``sample_n`` examples (reference samples 3,
        Operaters.py:221-223) and have the LLM derive a regex +
@@ -1065,22 +1183,12 @@ def filter_pattern_cond(
        compare Columns, OR-ed across templates — all JVM-side; the
        LLM cost is O(#templates), not O(rows).
     """
-    tmpl = F.regexp_replace(F.col(column).cast("string"), "[0-9]+", "<*>")
-    top = (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(tmpl.alias("_tmpl"))
-        .agg(
-            F.count(F.lit(1)).alias("_cnt"),
-            F.slice(F.sort_array(F.collect_set(F.col(column).cast("string"))), 1, sample_n).alias("_ex"),
-        )
-        .orderBy(F.col("_cnt").desc(), F.col("_tmpl"))
-        .limit(max_templates)
-        .collect()
-    )
+    tmpl = template_of(column)
+    top = template_profile(df, column, max_templates, sample_n).top
     llm = llm_factory()
     branches: list[Column] = []
-    for row in top:
-        template, examples = row["_tmpl"], row["_ex"]
+    for row in top[:max_templates]:
+        template, examples = row["_k"], row["_ex"]
         # A malformed LLM plan (bad JSON, missing keys, unknown
         # operator, non-numeric threshold) skips this template, as the
         # reference does (Operaters.py 'except Exception: continue').
@@ -1127,7 +1235,7 @@ def filter_pattern(
     condition: str,
     llm_factory: LLMFactory = default_llm_factory,
     sample_n: int = 3,
-    max_templates: int = 20,
+    max_templates: int = TEMPLATE_TOP,
 ) -> DataFrame:
     return df.filter(
         filter_pattern_cond(df, column, condition, llm_factory, sample_n, max_templates)

@@ -157,13 +157,16 @@ def run_filter(
             expensive.append(oid)
 
     if not expensive:
-        # no staging needed → compile with raw (pushdown-friendly)
-        # numeric leaves; a null tree value drops the row in filter()
-        # exactly as the coalesced form would
+        # no staging needed → recompile only the numeric leaves, raw
+        # (pushdown-friendly); a null tree value drops the row in
+        # filter() exactly as the coalesced form would.  Every other
+        # leaf keeps its built Column: rebuilding a profiled filter
+        # would re-ask the LLM for its plan
         raw = {
-            oid: _build_cond(df, op_name(oid), step_params(ops[oid]),
+            oid: _build_cond(df, "num_filter", step_params(ops[oid]),
                              llm_factory, raw_num=True)
-            for oid in cheap
+            if op_name(oid) == "num_filter" else col
+            for oid, col in cheap.items()
         }
         return df.filter(compile_logic(tree, raw))
 

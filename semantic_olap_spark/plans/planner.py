@@ -21,10 +21,15 @@ filter plans which ``plans/executor.py`` already runs:
   OLAP_Agent.py:473-476) falls back to sem_topk when the column
   isn't numeric.
 
-Profiling is Spark-native: ONE ``groupBy(value).count()`` shuffle per
-profile, then constant-size jobs over that value-frequency frame —
-total/avg-length/top-N coverage all derive from it, so profiling a
-100 TB column costs one aggregation, not four scans.
+Profiling is Spark-native and runs once per query: one profile per
+diced column, shared with the physical filter.  A profile is ONE
+grouping shuffle (digit-masked templates, or values) collected in one
+job as an ordered-limit top-N plus a totals aggregate; the dice veto
+reads it and ``filter_pattern``/``filter_enum`` build their filter
+from the same rows (``operators.semantic.template_profile`` /
+``value_profile``).  Profiles live for one planned query:
+``run_nl_filter`` (and the engine's ``run``/``plan_only``/
+``estimate``) forget them when they finish.
 """
 
 from __future__ import annotations
@@ -35,10 +40,16 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from semantic_olap_spark.llm import prompts as P
 from semantic_olap_spark.llm.client import LLMFactory, default_llm_factory
 from semantic_olap_spark.llm.repair import parse_llm_json
+from semantic_olap_spark.operators.semantic import (
+    profile_scope,
+    template_profile,
+    value_profile,
+)
 
 Logic = object  # int | [op, ...]
 
@@ -58,33 +69,20 @@ def profile_patternized(
     Digit-masked template concentration: top-``top_n`` templates
     cover > ``top_ratio_threshold`` of rows AND the number of
     distinct templates is < ``unique_ratio_threshold`` of rows — or
-    there are fewer than 5 templates overall.
+    there are fewer than 5 templates overall.  Reads the column's
+    template profile, the one ``filter_pattern`` then filters with.
     """
-    tmpl = F.regexp_replace(F.col(column).cast("string"), "[0-9]+", "<*>")
-    counts = (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(tmpl.alias("_t"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .persist()
+    prof = template_profile(df, column, top_n)
+    total, n_patterns = prof.totals["total"] or 0, prof.totals["n_groups"]
+    if total == 0:
+        return False
+    if n_patterns < 5:
+        return True
+    top = sum(r["_c"] for r in prof.top[:top_n])
+    return (
+        top / total > top_ratio_threshold
+        and n_patterns / total < unique_ratio_threshold
     )
-    try:
-        stats = counts.agg(
-            F.sum("_c").alias("total"), F.count(F.lit(1)).alias("n_patterns")
-        ).collect()[0]
-        total, n_patterns = stats["total"] or 0, stats["n_patterns"]
-        if total == 0:
-            return False
-        if n_patterns < 5:
-            return True
-        top = counts.orderBy(F.col("_c").desc()).limit(top_n).agg(
-            F.sum("_c")
-        ).collect()[0][0]
-        return (
-            top / total > top_ratio_threshold
-            and n_patterns / total < unique_ratio_threshold
-        )
-    finally:
-        counts.unpersist()
 
 
 def profile_enumerable(
@@ -98,51 +96,36 @@ def profile_enumerable(
 ) -> bool:
     """``is_enumerable`` (Dice_Agent.py:79-105) on Spark.
 
-    All statistics derive from one value-frequency aggregation:
-    distinct count, non-null total, length average weighted by
-    frequency, and top-``top_n`` coverage.  ``n_total`` includes
-    nulls (pandas ``len(col)``); coverage is over non-nulls (pandas
-    ``value_counts(normalize=True)``), mirroring the reference.
+    All statistics derive from the column's value profile, the one
+    ``filter_enum`` then previews: distinct count, total, length
+    average weighted by frequency, and top-``top_n`` coverage.
+    ``n_total`` includes nulls (pandas ``len(col)``); coverage is
+    over non-nulls (pandas ``value_counts(normalize=True)``),
+    mirroring the reference.
     """
-    # ONE aggregation over the table: group nulls too (their cast is
-    # NULL) so n_total needs no separate full-table count() scan
-    vc = (
-        df.groupBy(F.col(column).cast("string").alias("_v"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .persist()
+    prof = value_profile(df, column, top_n)
+    n_total = prof.totals["total"] or 0
+    n_nonnull = prof.totals["n_nonnull"] or 0
+    if n_total == 0 or n_nonnull == 0:
+        return False
+    n_unique = prof.totals["n_groups"]
+    avg_len = (prof.totals["len_sum"] or 0) / n_nonnull
+    top_cov = sum(r["_c"] for r in prof.top[:top_n]) / n_nonnull
+    return (
+        (n_unique <= max_unique or n_unique / n_total <= max_ratio)
+        and avg_len <= max_avg_length
+        and top_cov >= top_coverage_threshold
     )
-    try:
-        nn = F.col("_v").isNotNull()
-        stats = vc.agg(
-            F.count(F.when(nn, 1)).alias("n_unique"),
-            F.sum("_c").alias("n_total"),
-            F.sum(F.when(nn, F.col("_c"))).alias("n_nonnull"),
-            F.sum(F.when(nn, F.length("_v") * F.col("_c"))).alias("len_sum"),
-        ).collect()[0]
-        n_total = stats["n_total"] or 0
-        if n_total == 0:
-            return False
-        n_unique, n_nonnull = stats["n_unique"], stats["n_nonnull"] or 0
-        if n_nonnull == 0:
-            return False
-        avg_len = (stats["len_sum"] or 0) / n_nonnull
-        top_cov = (
-            vc.filter(nn)
-            .orderBy(F.col("_c").desc()).limit(top_n).agg(F.sum("_c"))
-            .collect()[0][0]
-            or 0
-        ) / n_nonnull
-        return (
-            (n_unique <= max_unique or n_unique / n_total <= max_ratio)
-            and avg_len <= max_avg_length
-            and top_cov >= top_coverage_threshold
-        )
-    finally:
-        vc.unpersist()
 
 
 def is_column_numeric(df: DataFrame, column: str) -> bool:
-    """Every non-null value parses as a number (OLAP_Agent.py:473-476)."""
+    """Every non-null value parses as a number (OLAP_Agent.py:473-476).
+
+    A numeric column answers from the schema: its string form always
+    parses back (NaN and ±Infinity included).  Other types scan.
+    """
+    if isinstance(df.schema[column].dataType, NumericType):
+        return True
     bad = df.filter(
         F.col(column).isNotNull()
         & F.col(column).cast("string").try_cast("double").isNull()
@@ -423,6 +406,7 @@ def plan_nl_filter(
     return flatten_plan(injected)
 
 
+@profile_scope()
 def run_nl_filter(
     df: DataFrame,
     operations: Sequence[Mapping],

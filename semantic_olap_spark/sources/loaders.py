@@ -12,10 +12,11 @@ Catalyst expression, no Python in the loop.
 ``range(len(df))``).  Distributed dense ids require a total order:
 
 - ``order_by`` given  → dense 0..n-1 ids by that order via
-  :func:`dense_ranks` — the parallel zipWithIndex construction
-  (range-partition + broadcast prefix-sum offsets), NOT an
-  unpartitioned window (deterministic, used by tests and anywhere
-  parity matters);
+  :func:`dense_ranks` — the parallel zipWithIndex construction: rows
+  are ranked inside their range partitions (position in the sorted
+  partition + broadcast prefix-sum offset), NOT by an unpartitioned
+  window or any window at all (deterministic, used by tests and
+  anywhere parity matters);
 - ``order_by=None``   → ``monotonically_increasing_id()`` (no
   shuffle, unique but sparse — fine whenever only identity is
   needed, which is every internal join in this engine).
@@ -484,31 +485,40 @@ def load_text(
 def dense_ranks_with_total(
     df: DataFrame, order_by: list[str], rank_col: str
 ) -> tuple[DataFrame, int]:
-    """Dense 0..n-1 ranks by ``order_by`` without a global window.
+    """Dense 0..n-1 ranks by ``order_by``, ranked inside range partitions.
 
     The ``zipWithIndex`` construction (same technique as
     ``sem_topk``'s tournament ranks): range-partition by the order
     columns so partition p's keys all sort below partition p+1's,
-    count rows per partition (one small job), then global rank =
-    per-partition ``row_number`` + the broadcast prefix-sum offset of
-    the partition.  Every stage is parallel — no single-partition
-    exchange — so this survives a 1000-executor total order where
-    ``Window.orderBy`` (unpartitioned) would funnel the table through
-    one task.
+    sort within each partition, count rows per partition (one small
+    job), then global rank = the row's position in its partition +
+    the broadcast prefix-sum offset of the partition.  The position
+    is ``monotonically_increasing_id()`` minus the partition's base
+    (``pid << 33``), so the rank is one projection over the ranged
+    frame: no window, no second exchange, and the result keeps the
+    ``defaultParallelism`` range partitions.  Every stage is parallel
+    — no single-partition exchange — so this survives a
+    1000-executor total order where ``Window.orderBy``
+    (unpartitioned) would funnel the table through one task.
 
-    The ranged frame is pinned with ``localCheckpoint`` (eager, cuts
-    lineage) — NOT a plain ``persist``: ``repartitionByRange``
-    samples boundaries with a per-execution seed, so if cached
-    blocks were lost and the frame recomputed, rows could land in
-    different partitions while the collected offsets still described
-    the old layout, silently corrupting ids.  A checkpoint makes
-    that impossible — lost blocks fail the job instead of
-    recomputing differently (correct-or-error, never wrong).
+    The ranged, sorted frame is pinned with ``localCheckpoint``
+    (eager, cuts lineage) — NOT a plain ``persist``:
+    ``repartitionByRange`` samples boundaries with a per-execution
+    seed and tied keys arrive in shuffle order, so if cached blocks
+    were lost and the frame recomputed, rows could land in different
+    partitions or positions while the collected offsets still
+    described the old layout, silently corrupting ids.  A checkpoint
+    makes that impossible — lost blocks fail the job instead of
+    recomputing differently (correct-or-error, never wrong).  The
+    rank's nondeterministic projection also keeps Catalyst from
+    pushing a later filter below it, so filtering ranked rows never
+    renumbers the survivors.
     """
     cols = [F.col(c) for c in order_by]
     nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     ranged = (
         df.repartitionByRange(nparts, *cols)
+        .sortWithinPartitions(*cols)
         .withColumn("_dr_pid", F.spark_partition_id())
         .localCheckpoint()
     )
@@ -518,24 +528,25 @@ def dense_ranks_with_total(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
     )
-    offsets: dict[int, int] = {}
+    # rank = monotonically_increasing_id() - base, with base =
+    # (pid << 33) - offset: the id's low 33 bits are the row's
+    # position in its partition
+    bases: dict[int, int] = {}
     acc = 0
     for pid, cnt in part_counts:
-        offsets[pid] = acc
+        bases[pid] = (pid << 33) - acc
         acc += cnt
     # empty input: F.create_map() with no args is map<void,void> and
-    # map()[int] fails analysis — use a zero offset (no rows anyway)
-    offset_expr = (
+    # map()[int] fails analysis — use a zero base (no rows anyway)
+    base_expr = (
         F.create_map(
-            *[F.lit(x) for pair in offsets.items() for x in pair]
+            *[F.lit(x) for pair in bases.items() for x in pair]
         )[F.col("_dr_pid")]
-        if offsets
+        if bases
         else F.lit(0)
     )
-    local_w = Window.partitionBy("_dr_pid").orderBy(*cols)
     out = ranged.withColumn(
-        rank_col,
-        (F.row_number().over(local_w) - F.lit(1) + offset_expr).cast("long"),
+        rank_col, (F.monotonically_increasing_id() - base_expr).cast("long")
     ).drop("_dr_pid")
     return out, acc
 

@@ -192,3 +192,35 @@ def test_run_filter_mixed_negated_and_positive_llm_leaves(tables, duck):
                OR contains(lower(text), 'window'))
         """,
     )
+
+
+def test_run_filter_builds_profiled_leaf_once(tables, duck):
+    # no LLM leaf: only the num_filter leaf is recompiled raw; the
+    # filter_enum leaf keeps its built Column, so its preview prompt
+    # goes to the LLM once
+    from semantic_olap_spark.llm import prompts as P
+    from semantic_olap_spark.llm.client import StubLLM
+
+    tasks: list[str] = []
+
+    class PromptLog(StubLLM):
+        def predict(self, prompt):
+            tasks.append(P.task_of(prompt))
+            return super().predict(prompt)
+
+    ops = [
+        {"id": 1, "operator_name": "filter_enum",
+         "parameters": {"column": "o_orderpriority",
+                        "condition": "urgent priority rows"}},
+        {"id": 2, "operator_name": "num_filter",
+         "parameters": {"conditions": [
+             {"column": "o_totalprice", "threshold": 100000,
+              "operator": ">"}]}},
+    ]
+    out = run_filter(tables["orders"], ops, ["AND", 1, 2], PromptLog)
+    assert tasks.count("filter_enum") == 1
+    assert_matches(
+        out, duck,
+        "SELECT * FROM orders "
+        "WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 100000",
+    )

@@ -61,9 +61,11 @@ def test_dense_ranks_parallel_no_global_window(spark):
     with redirect_stdout(buf):
         out.explain("formatted")
     plan = buf.getvalue()
-    # the only window is partitioned by the range-partition id
+    # rows are ranked inside the range partitions (keyed by the
+    # range-partition id): no window at all, so no single partition
     assert "_dr_pid" in plan
     assert "SinglePartition" not in plan
+    assert "Window" not in plan
 
 
 def test_with_olap_id_sparse_unique(spark):
@@ -224,3 +226,55 @@ def test_dense_ranks_empty_input(spark):
     out, total = dense_ranks_with_total(df, ["k"], "r")
     assert total == 0 and out.count() == 0
     assert "r" in out.columns
+
+
+def _keyed(spark, keys):
+    return spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], "k BIGINT, tag BIGINT"
+    )
+
+
+def test_dense_ranks_unique_keys_match_row_number(spark):
+    from pyspark.sql import Window
+
+    keys = [(i * 7919) % 1000 for i in range(1000)]
+    out = with_olap_id(_keyed(spark, keys), order_by=["k"])
+    want = _keyed(spark, keys).withColumn(
+        "rn", F.row_number().over(Window.orderBy("k")) - 1
+    )
+    assert {r["tag"]: r["OLAP_ID"] for r in out.collect()} == {
+        r["tag"]: r["rn"] for r in want.collect()
+    }
+
+
+def test_dense_ranks_tied_keys_permutation_in_order(spark):
+    keys = [i % 7 for i in range(700)]
+    rows = with_olap_id(_keyed(spark, keys), order_by=["k"]).collect()
+    by_id = sorted(rows, key=lambda r: r["OLAP_ID"])
+    assert [r["OLAP_ID"] for r in by_id] == list(range(len(keys)))
+    assert [r["k"] for r in by_id] == sorted(keys)
+
+
+def test_dense_ranks_survive_a_later_filter(spark):
+    keys = [(i * 37) % 500 for i in range(500)]
+    out = with_olap_id(_keyed(spark, keys), order_by=["k"])
+    ids = {r["tag"]: r["OLAP_ID"] for r in out.collect()}
+    kept = out.filter(F.col("k") % 3 == 0)
+    got = {r["tag"]: r["OLAP_ID"] for r in kept.collect()}
+    assert got and got == {t: i for t, i in ids.items() if keys[t] % 3 == 0}
+    # the filter stays above the rank projection: pushed below it, the
+    # rank would number only the surviving rows
+    plan = kept._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.index("Filter") < plan.index("monotonically_increasing_id")
+
+
+def test_dense_ranks_balanced_over_default_parallelism(spark):
+    df = spark.range(5000).repartition(1).select(
+        ((F.col("id") * 13 + 7) % 5000).alias("k")
+    )
+    out = with_olap_id(df, order_by=["k"])
+    sizes = out.rdd.glom().map(len).collect()
+    nparts = spark.sparkContext.defaultParallelism
+    assert len(sizes) == nparts and all(sizes)
+    assert sum(sizes) == 5000
+    assert "Window" not in out._jdf.queryExecution().executedPlan().toString()

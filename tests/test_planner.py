@@ -1,14 +1,19 @@
 """Planner verbs: dice strategy selection, slice planning, flatten,
 top-k dispatch, roll_up / drill_down orchestration (SURVEY.md §2.3)."""
 
+import uuid
+
 import pandas as pd
 from pyspark.sql import functions as F
 
+from semantic_olap_spark.llm import prompts as P
+from semantic_olap_spark.llm.client import StubLLM
 from semantic_olap_spark.plans.memory import CubeMemory
 from semantic_olap_spark.plans.planner import (
     compile_filter_op,
     dice_plan,
     flatten_plan,
+    inject_sub_plans,
     is_column_numeric,
     profile_enumerable,
     profile_patternized,
@@ -55,6 +60,37 @@ def test_is_column_numeric(tables, spark):
     assert not is_column_numeric(tables["orders"], "o_orderpriority")
     df = spark.createDataFrame([("1",), ("2.5",), (None,)], ["v"])
     assert is_column_numeric(df, "v")
+
+
+def _job_count(spark, fn):
+    """(fn(), number of Spark jobs fn launched) via a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_is_column_numeric_answers_numeric_types_from_schema(spark):
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [(float("nan"), Decimal("1.50"), True, "3.5"),
+         (float("inf"), Decimal("-2.00"), False, "-1e3"),
+         (float("-inf"), None, None, None)],
+        "d DOUBLE, m DECIMAL(10,2), b BOOLEAN, s STRING",
+    )
+    # NaN / ±Infinity and decimals parse back as numbers: no job needed
+    for col in ("d", "m"):
+        assert _job_count(spark, lambda: is_column_numeric(df, col)) == (True, 0)
+    # booleans and strings keep the scan
+    is_bool, jobs = _job_count(spark, lambda: is_column_numeric(df, "b"))
+    assert not is_bool and jobs >= 1
+    is_str, jobs = _job_count(spark, lambda: is_column_numeric(df, "s"))
+    assert is_str and jobs >= 1
 
 
 # ---- dice --------------------------------------------------------------
@@ -233,6 +269,64 @@ def test_run_nl_filter_end_to_end(tables, duck):
                OR contains(lower(text), 'text'))
           AND coalesce(try_cast(n_chars AS DOUBLE) > 200, false)
         """,
+    )
+
+
+class _PromptLog(StubLLM):
+    """StubLLM that records every driver-side prompt."""
+
+    def __init__(self, log):
+        self.log = log
+
+    def predict(self, prompt):
+        self.log.append(prompt)
+        return super().predict(prompt)
+
+
+def _dice_then_filter(spark, df, field, condition):
+    """dice → inject_sub_plans → flatten_plan → run_filter, counted."""
+    from semantic_olap_spark.plans.executor import run_filter
+
+    log: list[str] = []
+    factory = lambda: _PromptLog(log)  # noqa: E731
+    plan = {"operations": [{"id": 1, "agent": "dice", "field": field,
+                            "instruction": condition}], "logic": [1]}
+    flat, plan_jobs = _job_count(
+        spark, lambda: flatten_plan(inject_sub_plans(plan, df, factory))
+    )
+    out, filter_jobs = _job_count(
+        spark, lambda: run_filter(df, flat["operations"], flat["logic"], factory)
+    )
+    return flat, out, plan_jobs, filter_jobs, [P.task_of(p) for p in log]
+
+
+def test_dice_pattern_profiles_once_per_query(spark, tables):
+    # a fresh frame object: nothing memoized for it yet
+    df = tables["documents"].select("doc_id", "n_chars")
+    flat, out, plan_jobs, filter_jobs, tasks = _dice_then_filter(
+        spark, df, "n_chars", "n_chars > 200"
+    )
+    assert flat["operations"][0]["operator_name"] == "filter_pattern"
+    # the dice veto aggregated the templates; building the physical
+    # filter reuses that profile: no job, one pattern prompt per template
+    assert plan_jobs >= 1 and filter_jobs == 0
+    assert tasks.count("filter_pattern") == 1  # n_chars has one template
+    assert sorted(r["doc_id"] for r in out.collect()) == sorted(
+        r["doc_id"] for r in df.filter(F.col("n_chars") > 200).collect()
+    )
+
+
+def test_dice_enumerable_profiles_once_per_query(spark, tables):
+    df = tables["orders"].select("o_orderkey", "o_orderpriority")
+    flat, out, plan_jobs, filter_jobs, tasks = _dice_then_filter(
+        spark, df, "o_orderpriority", "urgent priority rows"
+    )
+    assert flat["operations"][0]["operator_name"] == "filter_enum_llm"
+    assert plan_jobs >= 1 and filter_jobs == 0
+    assert tasks.count("filter_enum") == 1
+    assert sorted(r["o_orderkey"] for r in out.collect()) == sorted(
+        r["o_orderkey"]
+        for r in df.filter(F.col("o_orderpriority") == "1-URGENT").collect()
     )
 
 

@@ -45,3 +45,7 @@ from semantic_olap_spark.sql import (  # noqa: F401
     register_semantic_sql,
     register_tables,
 )
+from semantic_olap_spark.worker_zip import install_in_worker
+
+# a Python worker imports the package to unpickle any of its UDFs
+install_in_worker()

@@ -8,8 +8,10 @@ Arrow-batched pandas UDF — a real backend would fan the batch out
 concurrently; the stub just loops.
 
 Executor-side construction: operators take an ``llm_factory``
-(a picklable zero-arg callable) rather than a live client, so each
-executor process builds its own client + cache.  The cache
+(a picklable zero-arg callable) rather than a live client, and call
+it inside the Python worker.  The client + cache it builds live for
+one task, since the UDF is unpickled per task (the scope
+``BudgetLLM`` documents).  The cache
 (CachingLLM) is keyed by the full prompt — semantically the
 reference-planned cache "keyed by (prompt-template, input, model)"
 (SURVEY.md §4 physical layer), since the prompt embeds both template

@@ -12,8 +12,10 @@ preview ≤ 100, ≤ max_templates regex plans — the reference's own caps,
 Operaters.py:286,221-223).
 
 Operators receive a picklable ``llm_factory`` (defaults to the
-deterministic stub) so each executor process builds its own client +
-prompt cache.  Every per-row LLM call goes through :func:`llm_udf`,
+deterministic stub) and call it inside the Python worker, never on the
+driver.  The client and its prompt cache live for one task: the UDF's
+closure state is unpickled with the UDF for every task, so nothing is
+shared across tasks.  Every per-row LLM call goes through :func:`llm_udf`,
 and every answer is read by one of the answer rules beside it.
 """
 

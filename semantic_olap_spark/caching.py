@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 __all__ = [
-    "cache_scope", "lineage_cut", "release_caches", "track",
+    "cache_scope", "force", "lineage_cut", "release_caches", "track",
     "tracked_persist",
 ]
 
@@ -63,6 +63,16 @@ def tracked_persist(
     with _LOCK:
         _TRACKED.append(df)
     return df
+
+
+def force(df: DataFrame) -> None:
+    """Run ``df`` to the end in one job, keeping no output.
+
+    Fills a persisted frame's cache completely, like ``count()``, but
+    without the count's final aggregation: that adds a shuffle stage,
+    which adaptive execution runs as extra jobs.
+    """
+    df.write.format("noop").mode("overwrite").save()
 
 
 def lineage_cut(

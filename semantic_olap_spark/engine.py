@@ -89,6 +89,20 @@ class OlapEngine:
             df, classify=classify or llm_relation_classifier(llm_factory),
             max_cached_nodes=max_cached_nodes,
         )
+        # Spark's cache manager matches a persisted frame by its plan,
+        # and engines over one frame share its ranking and root cache,
+        # so without this one engine would read the node caches
+        # another engine left behind: a session's LLM cost would
+        # depend on which earlier sessions asked the same thing.  A
+        # literal column (the root node's id), dropped at once, makes
+        # the plans of this engine's nodes its own; the optimizer
+        # prunes it, so the executed plan still reads the shared root
+        # cache and is unchanged.
+        root = self.memory.nodes[self.memory.root_id]
+        mark = "_olap_engine"
+        while mark in df.columns:
+            mark = "_" + mark
+        root.df = root.df.withColumn(mark, F.lit(root.id)).drop(mark)
 
     @classmethod
     def from_star(
@@ -430,7 +444,7 @@ class OlapEngine:
         and internal persists stay tracked until
         ``release_caches()``.
         """
-        from semantic_olap_spark.caching import cache_scope
+        from semantic_olap_spark.caching import cache_scope, force
         from semantic_olap_spark.plans.executor import run_filter
 
         filter_query, analysis_query = self.decompose(query)
@@ -468,8 +482,10 @@ class OlapEngine:
                         # one action INSIDE the scope: the node cache
                         # fills while the staged persists are alive,
                         # so releasing them at scope exit never
-                        # forces an LLM-stage recompute
-                        node.df.count()
+                        # forces an LLM-stage recompute.  A noop
+                        # write, not count(): same full fill, without
+                        # the count's extra shuffle stage and jobs
+                        force(node.df)
                 else:
                     node = parent
                 show = node.df
@@ -492,9 +508,9 @@ class OlapEngine:
                     # double-spending calls and (with a non-caching
                     # nondeterministic backend) possibly returning
                     # rows that differ from what the guard counted
-                    # (advice r8).
+                    # (advice r8).  Filled by a noop write, as above.
                     show = show.persist()
-                    show.count()
+                    force(show)
                     analysis_ran = True
         if analysis_ran:
             # re-register with the global release hook so a months-

@@ -27,6 +27,8 @@ derived views; operators never regenerate it (SURVEY.md §7.4 risk 3).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -625,17 +627,39 @@ def dense_ranks(
     return dense_ranks_with_total(df, order_by, rank_col)[0]
 
 
+# Ranked frames per source frame object (weakly: a dropped source drops
+# its ranking), then per order_by.  Every engine over one frame then
+# shares one checkpointed ranking and, through it, one root cache.  Two
+# threads ranking one frame at once may both rank it; the first stored
+# ranking is the one every caller gets.
+_RANKED: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
 def with_olap_id(df: DataFrame, order_by: list[str] | None = None) -> DataFrame:
     """Attach the synthetic row id (reference: OLAP_Memory.py:110-111).
 
     With ``order_by``: dense 0..n-1 ids by that order via
     :func:`dense_ranks` — deterministic (parity with the oracle's
     ``row_number() over (order by ...) - 1``) yet fully parallel; no
-    unpartitioned window.  Without: sparse unique ids via
-    ``monotonically_increasing_id`` (scale path, no shuffle, no job).
+    unpartitioned window.  The ranking is kept per source frame object
+    and ``order_by``, and lives as long as that object: a second call
+    on the same frame returns the same ranked frame and launches no
+    job.  It is a checkpoint taken at the first call, so to rank the
+    table's current files again, load the table again.  Without
+    ``order_by``: sparse unique ids via ``monotonically_increasing_id``
+    (scale path, no shuffle, no job).
     """
     if OLAP_ID in df.columns:
         return df
     if order_by:
-        return dense_ranks(df, order_by, OLAP_ID)
+        per_frame = _RANKED.setdefault(df, {})
+        key = tuple(order_by)
+        ranked = per_frame.get(key)
+        if ranked is None:
+            ranked = per_frame.setdefault(
+                key, dense_ranks(df, order_by, OLAP_ID)
+            )
+        return ranked
     return df.withColumn(OLAP_ID, F.monotonically_increasing_id())

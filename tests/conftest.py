@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 
 import duckdb
 import pandas as pd
@@ -67,6 +68,18 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+def job_count(spark, fn):
+    """(fn(), number of Spark jobs fn launched) via a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:

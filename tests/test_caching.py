@@ -149,7 +149,7 @@ def test_engine_session_holds_o_lattice_blocks(spark, tables):
         eng.run(q).count()  # caller materializes whenever it likes
     new = _new_ids(spark, base)
     # one block per lattice node, plus the root's dense_ranks
-    # localCheckpoint (sources/loaders.py — a deliberate engine-
-    # lifetime pin: recomputing a repartitionByRange with a fresh
-    # boundary seed would silently corrupt row ids)
+    # localCheckpoint (sources/loaders.py — a deliberate pin for the
+    # source frame's lifetime: recomputing a repartitionByRange with a
+    # fresh boundary seed would silently corrupt row ids)
     assert len(new) <= len(eng.memory.nodes) + 1

@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from semantic_olap_spark.engine import OlapEngine
-from tests.conftest import assert_matches
+from tests.conftest import assert_matches, job_count
 
 
 def _engine(tables):
@@ -234,3 +234,48 @@ def test_from_star_collision_refused(tables):
     dim = tables["customer"].withColumnRenamed("c_name", "shared")
     with pytest.raises(ValueError, match="collision"):
         OlapEngine.from_star(dup, [(dim, "o_custkey", "c_custkey")])
+
+
+def test_engines_over_one_frame_share_its_ranking_not_its_caches(
+    spark, tables
+):
+    from semantic_olap_spark.llm.client import StubLLM, wrap_cost_tracking
+
+    factory, stats = wrap_cost_tracking(spark, StubLLM)
+
+    def engine():
+        return OlapEngine(tables["documents"], llm_factory=factory,
+                          order_by=["doc_id"])
+
+    first = engine()
+    # the frame is ranked once: a second engine's constructor runs no job
+    second, jobs = job_count(spark, engine)
+    assert jobs == 0
+    # ...but reads no node cache of the first: the same query costs the
+    # same LLM calls on both
+    q = "n_chars > 200 and mentions spark in text"
+    rows, spent = [], []
+    for eng in (first, second):
+        before = stats.backend_calls
+        rows.append(sorted(map(tuple, eng.run(q).collect())))
+        spent.append(stats.backend_calls - before)
+    assert rows[0] == rows[1]
+    assert len(rows[0]) > 0
+    assert spent[0] > 0
+    assert spent[1] == spent[0]
+
+
+def test_materialized_slice_fills_its_node_in_one_job(spark, tables):
+    from semantic_olap_spark.llm.client import StubLLM, wrap_cost_tracking
+
+    factory, stats = wrap_cost_tracking(spark, StubLLM)
+    eng = OlapEngine(tables["documents"], llm_factory=factory,
+                     order_by=["doc_id"])
+    eng.memory.nodes[eng.memory.root_id].df.count()  # warm the root cache
+    out, jobs = job_count(spark, lambda: eng.run("mentions join in text"))
+    assert jobs == 1
+    spent = stats.backend_calls
+    assert spent > 0  # the slice really judged rows with the LLM
+    # the node cache is full: reading it calls no LLM again
+    assert len(out.collect()) > 0
+    assert stats.backend_calls == spent

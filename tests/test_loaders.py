@@ -1,15 +1,19 @@
 """Loaders: JSON flatten semantics + OLAP_ID assignment."""
 
+import gc
 import json
+import weakref
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from semantic_olap_spark.sources import loaders
 from semantic_olap_spark.sources.loaders import (
     load_json_flat,
     load_table,
     with_olap_id,
 )
+from tests.conftest import job_count
 
 
 def test_load_json_flat_stringifies_nested(spark, tmp_path):
@@ -37,6 +41,37 @@ def test_with_olap_id_dense_and_stable(spark):
     # idempotent: never reassigned (SURVEY §7.4 risk 3)
     again = with_olap_id(out, order_by=["v"])
     assert again is out
+
+
+def test_with_olap_id_ranks_a_frame_once_per_order(spark):
+    df = spark.createDataFrame([(3, "a"), (1, "c"), (2, "b")], ["k", "v"])
+    first = with_olap_id(df, order_by=["k"])
+    # every engine over one frame shares its ranking: no job the 2nd time
+    again, jobs = job_count(spark, lambda: with_olap_id(df, order_by=["k"]))
+    assert again is first
+    assert jobs == 0
+    # another order is another ranking
+    by_v, jobs = job_count(spark, lambda: with_olap_id(df, order_by=["v"]))
+    assert by_v is not first
+    assert jobs > 0
+    assert {r["v"]: r["OLAP_ID"] for r in by_v.collect()} == {
+        "a": 0, "b": 1, "c": 2
+    }
+    assert {r["k"]: r["OLAP_ID"] for r in first.collect()} == {
+        1: 0, 2: 1, 3: 2
+    }
+
+
+def test_with_olap_id_memo_lives_as_long_as_the_frame(spark):
+    df = spark.createDataFrame([(2,), (1,)], ["k"])
+    with_olap_id(df, order_by=["k"])
+    assert df in loaders._RANKED
+    n, ref = len(loaders._RANKED), weakref.ref(df)
+    del df
+    gc.collect()
+    # the ranking holds no reference to its source frame
+    assert ref() is None
+    assert len(loaders._RANKED) <= n - 1
 
 
 def test_dense_ranks_parallel_no_global_window(spark):

@@ -1,8 +1,6 @@
 """Planner verbs: dice strategy selection, slice planning, flatten,
 top-k dispatch, roll_up / drill_down orchestration (SURVEY.md §2.3)."""
 
-import uuid
-
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -31,7 +29,7 @@ from semantic_olap_spark.plans.rollup import (
     understand_self_reduce,
 )
 from semantic_olap_spark.sources.loaders import with_olap_id
-from tests.conftest import assert_matches
+from tests.conftest import assert_matches, job_count
 
 
 # ---- profiling ---------------------------------------------------------
@@ -62,18 +60,6 @@ def test_is_column_numeric(tables, spark):
     assert is_column_numeric(df, "v")
 
 
-def _job_count(spark, fn):
-    """(fn(), number of Spark jobs fn launched) via a job group."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_is_column_numeric_answers_numeric_types_from_schema(spark):
     from decimal import Decimal
 
@@ -85,11 +71,11 @@ def test_is_column_numeric_answers_numeric_types_from_schema(spark):
     )
     # NaN / ±Infinity and decimals parse back as numbers: no job needed
     for col in ("d", "m"):
-        assert _job_count(spark, lambda: is_column_numeric(df, col)) == (True, 0)
+        assert job_count(spark, lambda: is_column_numeric(df, col)) == (True, 0)
     # booleans and strings keep the scan
-    is_bool, jobs = _job_count(spark, lambda: is_column_numeric(df, "b"))
+    is_bool, jobs = job_count(spark, lambda: is_column_numeric(df, "b"))
     assert not is_bool and jobs >= 1
-    is_str, jobs = _job_count(spark, lambda: is_column_numeric(df, "s"))
+    is_str, jobs = job_count(spark, lambda: is_column_numeric(df, "s"))
     assert is_str and jobs >= 1
 
 
@@ -291,10 +277,10 @@ def _dice_then_filter(spark, df, field, condition):
     factory = lambda: _PromptLog(log)  # noqa: E731
     plan = {"operations": [{"id": 1, "agent": "dice", "field": field,
                             "instruction": condition}], "logic": [1]}
-    flat, plan_jobs = _job_count(
+    flat, plan_jobs = job_count(
         spark, lambda: flatten_plan(inject_sub_plans(plan, df, factory))
     )
-    out, filter_jobs = _job_count(
+    out, filter_jobs = job_count(
         spark, lambda: run_filter(df, flat["operations"], flat["logic"], factory)
     )
     return flat, out, plan_jobs, filter_jobs, [P.task_of(p) for p in log]

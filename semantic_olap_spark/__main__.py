@@ -78,7 +78,7 @@ def _run_one(eng, query: str, args) -> None:
     from semantic_olap_spark.caching import cache_scope
 
     # engine.run() already releases ITS operator-internal persists
-    # (engine.py run(materialize=True)); this outer scope is the
+    # (engine.py OlapEngine.run); this outer scope is the
     # REPL-session backstop for anything tracked outside that path,
     # so an N-query session holds O(lattice) storage blocks.  The
     # display happens INSIDE the scope (release-after-materialize).

@@ -27,7 +27,6 @@ real backend plugs in via ``llm_factory``.
 from __future__ import annotations
 
 import json
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,7 +35,12 @@ from semantic_olap_spark.llm import prompts as P
 from semantic_olap_spark.llm.client import LLMFactory, default_llm_factory
 from semantic_olap_spark.llm.repair import parse_llm_json
 from semantic_olap_spark.operators.semantic import profile_scope
-from semantic_olap_spark.plans.memory import CubeMemory
+from semantic_olap_spark.plans.memory import (
+    CubeMemory,
+    llm_relation_classifier,
+    load_cube,
+    save_cube,
+)
 from semantic_olap_spark.plans.planner import (
     flatten_plan,
     inject_sub_plans,
@@ -49,14 +53,12 @@ from semantic_olap_spark.sources.loaders import OLAP_ID, with_olap_id
 MAX_REACT_ROUNDS = 10  # reference bound (OLAP_Agent.py:324-327)
 
 
-@contextmanager
-def _null_scope():
-    """No-op scope for ``run(materialize=False)`` (lazy r7 behavior)."""
-    yield
-
-
 class OlapEngine:
-    """Session over one table: cube memory + the query lifecycle."""
+    """Session over one table: cube memory + the query lifecycle.
+
+    :meth:`close` (or leaving a ``with OlapEngine(...) as eng:``
+    block) releases the Spark storage the session's queries filled.
+    """
 
     def __init__(
         self,
@@ -67,10 +69,24 @@ class OlapEngine:
         max_cached_nodes: int | None = 16,
         track_costs: bool = False,
     ):
-        from semantic_olap_spark.plans.memory import llm_relation_classifier
-
         if OLAP_ID not in df.columns:
             df = with_olap_id(df, order_by=order_by)
+        # default: the reference's LLM relation judgment
+        # (OLAP_Memory.py:160-187) — Equal reuses a node outright,
+        # Subset seeds incremental delta filtering
+        self._wire(
+            df.sparkSession, llm_factory, track_costs,
+            lambda factory: CubeMemory(
+                df, classify=classify or llm_relation_classifier(factory),
+                max_cached_nodes=max_cached_nodes,
+            ),
+        )
+
+    def _wire(self, spark, llm_factory: LLMFactory, track_costs: bool,
+              memory_of) -> None:
+        """The constructor's and :meth:`load`'s shared set-up: cost
+        tracking, the cube memory ``memory_of(llm_factory)`` builds,
+        and a root plan of this engine's own."""
         self.cost_stats = None
         if track_costs:
             # accumulator-backed counting: executor-side UDF calls
@@ -79,28 +95,23 @@ class OlapEngine:
             from semantic_olap_spark.llm.client import wrap_cost_tracking
 
             llm_factory, self.cost_stats = wrap_cost_tracking(
-                df.sparkSession, llm_factory
+                spark, llm_factory
             )
         self.llm_factory = llm_factory
-        # default: the reference's LLM relation judgment
-        # (OLAP_Memory.py:160-187) — Equal reuses a node outright,
-        # Subset seeds incremental delta filtering
-        self.memory = CubeMemory(
-            df, classify=classify or llm_relation_classifier(llm_factory),
-            max_cached_nodes=max_cached_nodes,
-        )
+        self.memory = memory_of(llm_factory)
+        self._results: list[DataFrame] = []  # analysis persists of run()
         # Spark's cache manager matches a persisted frame by its plan,
-        # and engines over one frame share its ranking and root cache,
-        # so without this one engine would read the node caches
-        # another engine left behind: a session's LLM cost would
-        # depend on which earlier sessions asked the same thing.  A
-        # literal column (the root node's id), dropped at once, makes
-        # the plans of this engine's nodes its own; the optimizer
-        # prunes it, so the executed plan still reads the shared root
-        # cache and is unchanged.
+        # and engines over one frame (or one cube path) share its
+        # ranking and root cache, so without this one engine would
+        # read the node caches another engine left behind: a
+        # session's LLM cost would depend on which earlier sessions
+        # asked the same thing.  A literal column (the root node's
+        # id), dropped at once, makes the plans of this engine's
+        # nodes its own; the optimizer prunes it, so the executed plan
+        # still reads the shared root and is unchanged.
         root = self.memory.nodes[self.memory.root_id]
         mark = "_olap_engine"
-        while mark in df.columns:
+        while mark in root.df.columns:
             mark = "_" + mark
         root.df = root.df.withColumn(mark, F.lit(root.id)).drop(mark)
 
@@ -147,8 +158,6 @@ class OlapEngine:
     def save(self, path: str) -> None:
         """Persist the cube lattice for a later session
         (plans/memory.py:save_cube)."""
-        from semantic_olap_spark.plans.memory import save_cube
-
         save_cube(self.memory, path)
 
     @classmethod
@@ -160,31 +169,40 @@ class OlapEngine:
         max_cached_nodes: int | None = 16,
         track_costs: bool = False,
     ) -> "OlapEngine":
-        """Reopen a saved cube as a live engine: materialized nodes
-        come back as disk-backed scans, Equal/Subset probes reuse
-        them instead of re-filtering the root.  ``track_costs``
-        wires the same accumulator-backed LLM cost accounting as the
-        constructor."""
-        from semantic_olap_spark.plans.memory import (
-            llm_relation_classifier,
-            load_cube,
-        )
-
+        """Reopen a saved cube as a live engine: saved nodes come back
+        as deferred disk scans, Equal/Subset probes reuse them instead
+        of re-filtering the root.  Wired exactly like the constructor,
+        ``track_costs`` included."""
         eng = cls.__new__(cls)
-        eng.cost_stats = None
-        if track_costs:
-            from semantic_olap_spark.llm.client import wrap_cost_tracking
-
-            llm_factory, eng.cost_stats = wrap_cost_tracking(
-                spark, llm_factory
-            )
-        eng.llm_factory = llm_factory
-        eng.memory = load_cube(
-            spark, path,
-            classify=llm_relation_classifier(llm_factory),
-            max_cached_nodes=max_cached_nodes,
+        eng._wire(
+            spark, llm_factory, track_costs,
+            lambda factory: load_cube(
+                spark, path, classify=llm_relation_classifier(factory),
+                max_cached_nodes=max_cached_nodes,
+            ),
         )
         return eng
+
+    def close(self) -> None:
+        """Release this engine's Spark storage: every non-root node
+        cache and every analysis result :meth:`run` persisted.
+
+        The root is left alone: every engine over one source frame
+        shares its ranking and cache.  Metadata stays, and a frame
+        :meth:`run` already returned stays readable — it recomputes.
+        """
+        for node in self.memory.nodes.values():
+            if node.id != self.memory.root_id:
+                node.release()
+        for df in self._results:
+            df.unpersist()
+        self._results.clear()
+
+    def __enter__(self) -> "OlapEngine":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     # -- lifecycle pieces -------------------------------------------------
 
@@ -322,6 +340,29 @@ class OlapEngine:
 
     # -- the lifecycle ----------------------------------------------------
 
+    def _locate(self, filter_query: str):
+        """Probe the lattice and plan the delta filter.
+
+        Returns ``(equal_node, ancestors, base, flat)``: an Equal hit
+        is its own base; otherwise the base is the deepest Subset
+        ancestor, else the root, and ``flat`` is the flattened
+        micro-planned filter over it (``None`` for an empty filter
+        or an Equal hit).
+        """
+        equal_node, ancestors = self.memory.get_current_node(filter_query)
+        if equal_node is not None:
+            return equal_node, ancestors, equal_node, None
+        base = ancestors[0] if ancestors else self.memory.nodes[
+            self.memory.root_id
+        ]
+        flat = None
+        if filter_query:
+            plan = self.plan_filter(base.query, filter_query, base)
+            flat = flatten_plan(
+                inject_sub_plans(plan, base.df, self.llm_factory)
+            )
+        return None, ancestors, base, flat
+
     @profile_scope()
     def plan_only(self, query: str) -> dict:
         """Plan a query without executing it (deferred planning).
@@ -347,33 +388,17 @@ class OlapEngine:
         planned, because run() would still execute that phase.
         """
         filter_query, analysis_query = self.decompose(query)
-        out: dict = {
+        equal_node, _, base, flat = self._locate(filter_query)
+        return {
             "filter_query": filter_query,
             "analysis_query": analysis_query,
-            "operations": [],
-            "logic": None,
-            "reused_node": None,
-            "topk": None,
-        }
-        equal_node, ancestors = self.memory.get_current_node(filter_query)
-        if equal_node is not None:
-            out["reused_node"] = equal_node.id
-            base = equal_node
-        else:
-            base = ancestors[0] if ancestors else self.memory.nodes[
-                self.memory.root_id
-            ]
-            if filter_query:
-                plan = self.plan_filter(base.query, filter_query, base)
-                injected = inject_sub_plans(plan, base.df, self.llm_factory)
-                flat = flatten_plan(injected)
-                out["operations"] = flat["operations"]
-                out["logic"] = flat["logic"]
-        if analysis_query:
-            out["topk"] = understand_topk(
+            "operations": flat["operations"] if flat else [],
+            "logic": flat["logic"] if flat else None,
+            "reused_node": equal_node.id if equal_node else None,
+            "topk": understand_topk(
                 analysis_query, base.df.columns, self.llm_factory
-            )
-        return out
+            ) if analysis_query else None,
+        }
 
     @profile_scope()
     def estimate(self, query: str, sample_rows: int = 2048,
@@ -391,28 +416,20 @@ class OlapEngine:
         from semantic_olap_spark.plans.costmodel import estimate_filter_cost
 
         filter_query, _ = self.decompose(query)
-        equal_node, ancestors = self.memory.get_current_node(filter_query)
-        if equal_node is not None or not filter_query:
+        equal_node, _, base, flat = self._locate(filter_query)
+        if flat is None:
+            node = equal_node or self.memory.nodes[self.memory.root_id]
             return {
-                "total_rows": (equal_node.df if equal_node else
-                               self.memory.nodes[self.memory.root_id].df
-                               ).count(),
+                "total_rows": node.df.count(),
                 "sample_rows": 0,
                 "probed": False,
                 "per_op": {},
                 "total_llm_calls": 0,
-                "reused_node": equal_node.id if equal_node else
-                self.memory.root_id,
+                "reused_node": node.id,
                 "operators": [],
             }
-        parent = ancestors[0] if ancestors else self.memory.nodes[
-            self.memory.root_id
-        ]
-        plan = self.plan_filter(parent.query, filter_query, parent)
-        injected = inject_sub_plans(plan, parent.df, self.llm_factory)
-        flat = flatten_plan(injected)
         est = estimate_filter_cost(
-            parent.df, flat["operations"], flat["logic"],
+            base.df, flat["operations"], flat["logic"],
             sample_rows=sample_rows, probe_llm=probe_llm,
             llm_factory=self.llm_factory,
         )
@@ -426,96 +443,68 @@ class OlapEngine:
         return out
 
     @profile_scope()
-    def run(self, query: str, materialize: bool = True) -> DataFrame:
+    def run(self, query: str) -> DataFrame:
         """Execute one NL query through the full lifecycle.
 
-        ``materialize=True`` (default) fills the new lattice node's
-        cache inside a :func:`~semantic_olap_spark.caching.cache_scope`
-        and releases the query's operator-internal persists (staged-
-        executor undecided sets, guard slices) on exit — the
-        months-long-session lifecycle the caching module exists for,
-        applied where the caller shouldn't have to know about it.
-        Reference parity: its cube nodes store eager pandas frames
-        (OLAP_Memory.py ``Cube_node``), so eagerly populating the
-        node cache matches the contract, and every later consumer
-        (the returned frame included) reads the node cache instead
-        of the released lineage.  ``materialize=False`` keeps the
-        fully-lazy r7 behavior: nothing runs until the caller acts,
-        and internal persists stay tracked until
-        ``release_caches()``.
+        The query runs inside a
+        :func:`~semantic_olap_spark.caching.cache_scope`: a new
+        lattice node's cache fills inside it, and the query's
+        operator-internal persists (staged-executor undecided sets,
+        guard slices) are released on exit — the months-long-session
+        lifecycle the caching module exists for, applied where the
+        caller shouldn't have to know about it.  Reference parity:
+        its cube nodes store eager pandas frames (OLAP_Memory.py
+        ``Cube_node``), so eagerly populating the node cache matches
+        the contract, and every later consumer (the returned frame
+        included) reads the node cache instead of the released
+        lineage.  An analysis result is persisted and filled inside
+        the scope too, then left to ``release_caches()`` and
+        :meth:`close`.
         """
-        from semantic_olap_spark.caching import cache_scope, force
+        from semantic_olap_spark.caching import cache_scope, force, track
         from semantic_olap_spark.plans.executor import run_filter
 
         filter_query, analysis_query = self.decompose(query)
 
-        with cache_scope() if materialize else _null_scope():
-            equal_node, ancestors = self.memory.get_current_node(
-                filter_query
-            )
-            if equal_node is not None:
-                node = equal_node
-                show = node.df
-            else:
-                parent = ancestors[0] if ancestors else self.memory.nodes[
-                    self.memory.root_id
-                ]
-                if filter_query:
-                    plan = self.plan_filter(
-                        parent.query, filter_query, parent
-                    )
-                    injected = inject_sub_plans(
-                        plan, parent.df, self.llm_factory
-                    )
-                    flat = flatten_plan(injected)
-                    result = run_filter(
-                        parent.df, flat["operations"], flat["logic"],
-                        self.llm_factory,
-                    )
-                    node = self.memory.add_node(
-                        filter_query, result,
-                        plan=list(parent.plan) + flat["operations"],
-                        parent_ids=[a.id for a in ancestors]
-                        or [parent.id],
-                    )
-                    if materialize:
-                        # one action INSIDE the scope: the node cache
-                        # fills while the staged persists are alive,
-                        # so releasing them at scope exit never
-                        # forces an LLM-stage recompute.  A noop
-                        # write, not count(): same full fill, without
-                        # the count's extra shuffle stage and jobs
-                        force(node.df)
-                else:
-                    node = parent
-                show = node.df
-
-            analysis_ran = False
+        with cache_scope():
+            _, ancestors, node, flat = self._locate(filter_query)
+            if flat is not None:
+                result = run_filter(
+                    node.df, flat["operations"], flat["logic"],
+                    self.llm_factory,
+                )
+                node = self.memory.add_node(
+                    filter_query, result,
+                    plan=list(node.plan) + flat["operations"],
+                    parent_ids=[a.id for a in ancestors] or [node.id],
+                )
+                # one action INSIDE the scope: the node cache fills
+                # while the staged persists are alive, so releasing
+                # them at scope exit never forces an LLM-stage
+                # recompute.  A noop write, not count(): same full
+                # fill, without the count's extra shuffle stage and jobs
+                force(node.df)
+            show = node.df
             if analysis_query:
                 show = self._run_analysis(analysis_query, node)
                 params = understand_topk(
                     analysis_query, show.columns, self.llm_factory
                 )
                 show = topk_dispatch(show, params, self.llm_factory)
-                if materialize:
-                    # persist UNTRACKED (so scope exit doesn't drop
-                    # it) and force one action INSIDE the scope: the
-                    # analysis result fills its cache while the
-                    # operator-internal persists (llm_rerank guard
-                    # slices, staged undecided sets) are still alive
-                    # — otherwise the caller's first action would
-                    # recompute the LLM judge stages after release,
-                    # double-spending calls and (with a non-caching
-                    # nondeterministic backend) possibly returning
-                    # rows that differ from what the guard counted
-                    # (advice r8).  Filled by a noop write, as above.
-                    show = show.persist()
-                    force(show)
-                    analysis_ran = True
-        if analysis_ran:
+                # persist UNTRACKED (so scope exit doesn't drop it)
+                # and force one action INSIDE the scope: the analysis
+                # result fills its cache while the operator-internal
+                # persists (llm_rerank guard slices, staged undecided
+                # sets) are still alive — otherwise the caller's first
+                # action would recompute the LLM judge stages after
+                # release, double-spending calls and (with a
+                # non-caching nondeterministic backend) possibly
+                # returning rows that differ from what the guard
+                # counted (advice r8).  Filled by a noop write, as above.
+                show = show.persist()
+                force(show)
+        if analysis_query:
             # re-register with the global release hook so a months-
             # long session can still free it via release_caches()
-            from semantic_olap_spark.caching import track
-
-            track(show)
+            self._results.append(track(show))
         return show

@@ -97,7 +97,6 @@ class StubLLM(BaseLLM):
     - self_reduce        → count on count-words, else num_reduce with
                            the first agg word found.
     - granularity_match  → case-insensitive exact name match.
-    - drill_down_dimension → title from the first 3 tokens.
     - topk_intent        → "top N"/superlative regex; num iff the
                            matched field name looks numeric.
     - decompose_query    → splits on " then ".
@@ -234,12 +233,6 @@ class StubLLM(BaseLLM):
                 if str(c).strip().lower() == target:
                     return json.dumps({"thought": "exact match", "chosen": c})
             return json.dumps({"thought": "no match", "chosen": "None"})
-        if task == "drill_down_dimension":
-            q = fields.get("query", "")
-            toks = P.condition_tokens(q)[:3] or ["derived"]
-            return json.dumps(
-                {"title": "_".join(toks), "dimension_desc": q}
-            )
         if task == "topk_intent":
             q = fields.get("query", "")
             cols = json.loads(content)

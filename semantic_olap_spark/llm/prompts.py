@@ -286,19 +286,6 @@ def granularity_match_prompt(
     )
 
 
-def drill_dim_prompt(query: str, thought: str = "") -> str:
-    """New-dimension extraction (Drill_Down_Agent PROMPT_DRILLDOWN_DIMENSION)."""
-    return (
-        "### task: drill_down_dimension\n"
-        "Extract a new column: title (lowercase, underscores, ≤3 "
-        "words) and dimension_desc (one sentence). Reply with JSON "
-        '{"title": str, "dimension_desc": str}.\n'
-        f"Query: {query}\n"
-        f"Thought: {thought}\n"
-        f"{CONTENT_SEP}\n{query}"
-    )
-
-
 def topk_intent_prompt(columns: Sequence[str], query: str) -> str:
     """Top-k intent detection (OLAP_Agent UNDERSTAND_TOPK_PROMPT)."""
     return (

@@ -23,9 +23,9 @@ Equal/Subset/...):
   ``Equal/Subset/Contain/Intersect/No_relation`` plugs in the LLM
   judgment for the semantic cases.
 
-At 100 TB, "materialized" should be a persisted table (Delta/parquet)
-rather than executor memory; ``persist_path`` hooks that in without
-changing the lattice logic.
+The disk path is the whole lattice, not a node: :func:`save_cube` /
+:func:`save_cube_incremental` write node frames as parquet and
+:func:`load_cube` reopens them as deferred disk scans.
 """
 
 from __future__ import annotations
@@ -91,7 +91,7 @@ class GranularityView:
         self._loader = loader
         self.description = description
         self.plan = plan or []
-        self.view: DataFrame | None = None  # memoized aggregate (set_view)
+        self.view: DataFrame | None = None  # memoized aggregate
 
     @property
     def df(self) -> DataFrame:
@@ -102,9 +102,6 @@ class GranularityView:
     @df.setter
     def df(self, value: DataFrame) -> None:
         self._df = value
-
-    def set_view(self, view: DataFrame) -> None:
-        self.view = view
 
 
 class ColViews:
@@ -139,16 +136,13 @@ class CubeNode:
     _ids = itertools.count()
 
     def __init__(self, query: str, df: DataFrame | None,
-                 plan: list | None = None,
-                 cache: bool = True, persist_path: str | None = None,
-                 loader=None):
+                 plan: list | None = None, loader=None):
         self.id = next(CubeNode._ids)
         self.query = query
         self.plan = plan or []
         self.parents: list[int] = []
         self.children: list[int] = []
         self._loader = loader
-        self.persist_path = persist_path
         self.col_views: dict[str, ColViews] = {}
         if df is None:
             if loader is None:
@@ -159,15 +153,7 @@ class CubeNode:
             # assigned once per node, carried thereafter
             # (OLAP_Memory.py:110-111; SURVEY.md §7.4 risk 3)
             df = df.withColumn(OLAP_ID, F.monotonically_increasing_id())
-        if persist_path is not None:
-            # disk-backed materialization: at 100 TB executor-memory
-            # caching is eviction churn; a written table survives
-            # session restarts and later nodes scan it with pushdown
-            df.write.mode("overwrite").parquet(persist_path)
-            df = df.sparkSession.read.parquet(persist_path)
-            self._df = df
-        else:
-            self._df = df.cache() if cache else df
+        self._df = df.cache()
 
     @property
     def df(self) -> DataFrame:
@@ -278,9 +264,8 @@ class CubeMemory:
     # -- lattice ---------------------------------------------------------
 
     def add_node(self, query: str, df: DataFrame, plan: list,
-                 parent_ids: Sequence[int],
-                 persist_path: str | None = None) -> CubeNode:
-        node = CubeNode(query, df, plan, persist_path=persist_path)
+                 parent_ids: Sequence[int]) -> CubeNode:
+        node = CubeNode(query, df, plan)
         self.nodes[node.id] = node
         for pid in parent_ids:
             self.add_edge(pid, node.id)
@@ -621,26 +606,23 @@ def load_cube(
     path: str,
     classify: Callable[[str, str], Relation] | None = None,
     max_cached_nodes: int | None = None,
-    lazy: bool = False,
 ) -> CubeMemory:
     """Reopen a :func:`save_cube` directory as a live lattice.
 
-    Node frames come back as plain parquet scans (disk-backed — no
-    eager cache; predicate pushdown applies on every reuse).  Node
-    ids are re-assigned but topology, queries, plans, and
-    granularity catalogs are preserved.  Incremental checkpoints
+    The cube opens in catalog mode: only the manifest and the root
+    frame load at open.  Every other node and granularity is metadata
+    with a deferred disk-scan loader, resolved on first ``.df`` touch
+    as a plain parquet scan (disk-backed, no cache; predicate
+    pushdown applies on every reuse).  Open cost is O(manifest), not
+    one parquet-footer job per node, and lattice probes
+    (``get_current_node``'s classify calls, topology walks) never
+    materialize frames (pinned by
+    tests/test_cube_persistence.py::test_catalog_mode_scales).  Node
+    ids are re-assigned but topology, queries, plans, and granularity
+    catalogs are preserved.  Incremental checkpoints
     (``delta-*.json`` from :func:`save_cube_incremental`) merge in
     transparently, and the returned memory can keep checkpointing
     incrementally into the same directory.
-
-    ``lazy=True`` is CATALOG MODE for thousands-of-nodes sessions
-    (r6 VERDICT #8): only the root frame and the manifest load at
-    open; every other node and granularity becomes metadata with a
-    deferred disk-scan loader resolved on first ``.df`` touch.  Open
-    cost is O(manifest), not one parquet-footer job per node, and
-    lattice probes (``get_current_node``'s classify calls, topology
-    walks) never materialize frames.  Pinned by
-    tests/test_cube_persistence.py::test_catalog_mode_scales.
     """
     fs, path = _cube_fs(path, spark)
     manifest = _merged_manifest(fs, path)
@@ -658,50 +640,28 @@ def load_cube(
     mem.nodes[mem.root_id].query = by_old[root_old]["query"]
     id_map = {root_old: mem.root_id}
 
-    def _node_loader(old_id: int):
-        return lambda: spark.read.parquet(
-            fs.spark_path(f"{path}/nodes/{old_id}")
-        )
+    def _scan(rel: str):
+        return lambda: spark.read.parquet(fs.spark_path(f"{path}/{rel}"))
 
     for old_id, spec in by_old.items():
         if old_id == root_old:
             continue
-        if lazy:
-            node = CubeNode(
-                spec["query"], None, plan=spec["plan"],
-                loader=_node_loader(old_id),
-            )
-        else:
-            df = spark.read.parquet(fs.spark_path(f"{path}/nodes/{old_id}"))
-            node = CubeNode(spec["query"], df, plan=spec["plan"],
-                            cache=False)
+        node = CubeNode(
+            spec["query"], None, plan=spec["plan"],
+            loader=_scan(f"nodes/{old_id}"),
+        )
         mem.nodes[node.id] = node
         id_map[old_id] = node.id
-
-    def _gran_loader(old_id: int, column: str, name: str):
-        return lambda: spark.read.parquet(
-            fs.spark_path(f"{path}/grans/{old_id}/{column}/{name}")
-        )
 
     for old_id, spec in by_old.items():
         for p in spec["parents"]:
             mem.add_edge(id_map[int(p)], id_map[old_id])
         for g in spec["granularities"]:
-            if lazy:
-                gv = GranularityView(
-                    g["name"], None, g.get("description", ""),
-                    g.get("plan"),
-                    loader=_gran_loader(old_id, g["column"], g["name"]),
-                )
-                mem.nodes[id_map[old_id]].dimension(g["column"]).add(gv)
-                continue
-            gdf = spark.read.parquet(
-                fs.spark_path(f"{path}/grans/{old_id}/{g['column']}/{g['name']}")
+            gv = GranularityView(
+                g["name"], None, g.get("description", ""), g.get("plan"),
+                loader=_scan(f"grans/{old_id}/{g['column']}/{g['name']}"),
             )
-            mem.register_granularity(
-                id_map[old_id], g["column"], g["name"], gdf,
-                g.get("description", ""), g.get("plan"),
-            )
+            mem.nodes[id_map[old_id]].dimension(g["column"]).add(gv)
     # everything just loaded is on disk already: seed the persisted
     # maps (new in-memory id → saved directory id) so incremental
     # checkpoints into this directory write only genuinely new work

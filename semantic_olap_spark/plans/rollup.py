@@ -231,7 +231,7 @@ def roll_up(
 
     gv = dim.get(actual)
     if gv is not None:
-        gv.set_view(grouped)
+        gv.view = grouped
         gv.plan = list(gv.plan) + analyze_plan
     return (
         message(f" And Then '{analyzed}' has been analyzed according to it."),
@@ -293,16 +293,3 @@ def drill_down(
             new_df,
         )
     return f"New dimension has successfully build: {dimension_name}", new_df
-
-
-def extract_dimension(
-    query: str, thought: str = "",
-    llm_factory: LLMFactory = default_llm_factory,
-) -> dict:
-    """LLM dimension extraction (Drill_Down_Agent.understand)."""
-    llm = llm_factory()
-    res = parse_llm_json(llm.predict(P.drill_dim_prompt(query, thought)), default={})
-    return {
-        "title": res.get("title", "derived"),
-        "dimension_desc": res.get("dimension_desc", query),
-    }

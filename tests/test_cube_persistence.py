@@ -187,14 +187,14 @@ def test_incremental_after_load_same_directory(tables, spark, tmp_path):
 
 
 def test_lazy_load_defers_frames(tables, spark, tmp_path):
-    # catalog mode: only the root materializes at open; node frames
-    # and granularity maps resolve on first .df touch and release()
-    # returns a catalog node to pure metadata
+    # catalog mode (load_cube's only mode): only the root materializes
+    # at open; node frames and granularity maps resolve on first .df
+    # touch and release() returns a catalog node to pure metadata
     mem, n1 = _build(tables)
     d = str(tmp_path / "cube_lazy")
     save_cube(mem, d)
 
-    mem2 = load_cube(spark, d, lazy=True)
+    mem2 = load_cube(spark, d)
     root2 = mem2.nodes[mem2.root_id]
     others = [n for n in mem2.nodes.values() if n.id != mem2.root_id]
     assert root2.is_loaded
@@ -245,7 +245,7 @@ def test_catalog_mode_scales(tables, spark, tmp_path):
     json.dump(manifest, open(f"{d}/cube.json", "w"))
 
     t0 = time.perf_counter()
-    mem2 = load_cube(spark, d, lazy=True)
+    mem2 = load_cube(spark, d)
     open_sec = time.perf_counter() - t0
     assert len(mem2.nodes) == n_extra + 2
 

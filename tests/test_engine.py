@@ -279,3 +279,55 @@ def test_materialized_slice_fills_its_node_in_one_job(spark, tables):
     # the node cache is full: reading it calls no LLM again
     assert len(out.collect()) > 0
     assert stats.backend_calls == spent
+
+
+def _persisted_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+def test_closed_engines_leave_no_persists_behind(spark, tables):
+    """close() releases every node cache and analysis result an engine
+    filled, so N sessions over one frame hold what the first held (the
+    shared root); a frame run() returned stays readable afterwards."""
+    from semantic_olap_spark.caching import release_caches
+
+    release_caches()
+    base = _persisted_ids(spark)
+    # no top-k clause: sem_topk's dense-rank localCheckpoint belongs
+    # to the returned frame's lineage, not to the engine, and stays
+    # until the JVM collects that lineage
+    analysis = "mentions spark then group lang into lang_family and count"
+    after = []
+    for _ in range(3):
+        with OlapEngine(tables["documents"], order_by=["doc_id"]) as eng:
+            eng.run("mentions spark in text")
+            out = eng.run(analysis)
+            rows = sorted(map(tuple, out.collect()))
+            held = _persisted_ids(spark) - base
+        after.append(_persisted_ids(spark) - base)
+        assert len(held) > len(after[-1])  # close() released something
+    assert [len(a) for a in after] == [len(after[0])] * len(after)
+    assert rows and sorted(map(tuple, out.collect())) == rows
+
+
+def test_traced_layers_reach_the_engine_call_sites(spark, tables):
+    """The layer tracer patches the planner and roll-up calls in the
+    engine module's namespace: a query with a filter and an analysis
+    must record every engine-level span, so a refactor that moves a
+    traced call elsewhere fails here instead of reporting zeros."""
+    from perfbench.tracing import Tracer
+
+    eng = _engine(tables)
+    tracer = Tracer(spark.sparkContext)
+    with tracer.installed():
+        eng.run(
+            "n_chars > 200 then group lang into lang_family and count "
+            "and show the top 1 lang_family"
+        ).collect()
+    names = {s["name"] for s in tracer.spans}
+    assert {
+        "engine.decompose", "engine.plan_filter", "plans.memory.probe",
+        "plans.planner.inject", "plans.executor.run_filter",
+        "plans.planner.understand_topk", "plans.planner.topk_dispatch",
+    } <= names

@@ -674,3 +674,70 @@ def test_jaccard_auto_budget_flips_strategy(spark):
     ref = key(jaccard_pairs(df, threshold=0.4, block_col="source",
                             strategy="allpairs"))
     assert lo == hi == ref and len(ref) > 0
+
+
+# ---- matmul pre-collect guards: exact non-null count before refusing ----
+
+
+def _emb(spark, n=24, dim=8):
+    rows = [
+        (i, i % 3, [float((i * 7 + j * 3) % 11) / 11.0 for j in range(dim)])
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<double>"
+    )
+
+
+def _with_nulls(spark, df, n=3000):
+    nulls = spark.createDataFrame(
+        [(1000 + i, 0, None) for i in range(n)],
+        "vec_id long, label int, embedding array<double>",
+    )
+    return df.unionByName(nulls)
+
+
+def test_cosine_pairs_null_heavy_corpus_not_over_rejected(spark):
+    """Row-count upper bound trips, exact non-null count fits: the
+    call must succeed and match the expr path."""
+    emb = _emb(spark, n=12)
+    # budget sized between the bounds: 3012 rows × 8 dim × 8 B ≈
+    # 0.18 MiB (upper bound) vs 12 × 64 B < 0.001 MiB (exact)
+    got = cosine_pairs(
+        _with_nulls(spark, emb), threshold=0.5, block_col="label",
+        strategy="matmul", max_broadcast_mb=0.01,
+    )
+    want = cosine_pairs(emb, threshold=0.5, block_col="label",
+                        strategy="expr")
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+
+def test_cosine_pairs_guard_still_trips_when_truly_oversized(spark):
+    import pytest
+
+    with pytest.raises(ValueError, match="pre-collect"):
+        cosine_pairs(
+            _emb(spark), threshold=0.5, block_col="label", strategy="matmul",
+            max_broadcast_mb=0,
+        )
+
+
+def test_dedup_against_null_heavy_seen_not_over_rejected(spark):
+    from semantic_olap_spark.functions.dedup import dedup_against_embeddings
+
+    emb = _emb(spark, n=12)
+    seen = _with_nulls(spark, emb.filter("vec_id % 2 = 0"))
+    batch = emb.filter("vec_id % 2 = 1")
+    got = dedup_against_embeddings(
+        batch, seen, threshold=0.4, nbits=4, strategy="matmul",
+        max_broadcast_mb=0.01,
+    )
+    want = dedup_against_embeddings(
+        batch, emb.filter("vec_id % 2 = 0"), threshold=0.4, nbits=4,
+        strategy="expr",
+    )
+    assert sorted(r["vec_id"] for r in got.collect()) == sorted(
+        r["vec_id"] for r in want.collect()
+    )

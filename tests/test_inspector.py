@@ -85,7 +85,7 @@ def test_metadata_only_render_triggers_no_jobs(spark, tables, tmp_path):
     mem, _ = _build(tables)
     d = str(tmp_path / "cube")
     save_cube(mem, d)
-    lazy = load_cube(spark, d, lazy=True)
+    lazy = load_cube(spark, d)
     html = lattice_html(lazy, preview_rows=0)
     txt = lattice_text(lazy)
     assert "(unloaded)" in txt

@@ -78,7 +78,7 @@ def test_granularity_memoization(tables):
     assert joined.count() == root.df.count()
     assert "src_family" in joined.columns
     # memoized aggregate
-    g.set_view(joined.groupBy("src_family").count())
+    g.view = joined.groupBy("src_family").count()
     assert mem.find_granularity(root.id, "source", "src_family").view is not None
 
 

@@ -23,7 +23,6 @@ from semantic_olap_spark.plans.planner import (
 )
 from semantic_olap_spark.plans.rollup import (
     drill_down,
-    extract_dimension,
     query_granularity_exist,
     roll_up,
     understand_self_reduce,
@@ -464,24 +463,6 @@ def test_drill_down_absorbs_coarser(spark, tables):
     dim = node.col_views["detail_topic"]
     assert "lang_family" in dim.names()  # absorbed
     assert "lang" not in node.col_views  # coarser removed
-
-
-def test_extract_dimension_stub():
-    d = extract_dimension("extract the root cause family")
-    assert d["title"] == "extract_root_cause"
-    assert d["dimension_desc"]
-
-
-def test_cube_node_persist_path(spark, tables, tmp_path):
-    mem = CubeMemory(with_olap_id(tables["region"], order_by=["r_regionkey"]))
-    p = str(tmp_path / "node0")
-    node = mem.add_node(
-        "region subset", mem.nodes[mem.root_id].df.limit(3), [],
-        [mem.root_id], persist_path=p,
-    )
-    assert node.df.count() == 3
-    # re-read from disk, not lineage: input files point at the path
-    assert any("node0" in f for f in node.df.inputFiles())
 
 
 def test_plan_only_entry_point_replays_identically(spark, tables):

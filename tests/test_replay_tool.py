@@ -80,3 +80,14 @@ def test_first_divergence_reports_position():
     # length mismatch past the common prefix
     i, ra, rb = rc._first_divergence(a, a[:2])
     assert i == 2 and rb == "<end>"
+
+
+def test_merge_golden_prunes_stale_keys():
+    # a targeted --golden-write drops hashes of queries removed from
+    # the registry instead of letting stale keys linger
+    existing = {"kept": "h1", "renamed_old": "h2", "updated": "h3"}
+    new_hashes = {"updated": "h3b", "added": "h4"}
+    registry = ["kept", "updated", "added", "never_run"]
+    merged, stale = rc.merge_golden(existing, new_hashes, registry)
+    assert merged == {"kept": "h1", "updated": "h3b", "added": "h4"}
+    assert stale == ["renamed_old"]
